@@ -148,17 +148,17 @@ def validate_rows(
     fmts: list,
     captions: list,
     phashes: list,
-    chunk: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batched ``validate_row``: same verdicts, vectorized across rows.
 
     Returns (status, psnr_db, psnr_ok, caption_ok, phash_ok) arrays. Rows
     whose payload decodes to exactly the stored (w, h) shape are validated
-    through one numpy pass per ``chunk`` rows (chunked so the (rows × w·h)
+    through one numpy pass per chunk of rows (chunked so the (rows × w·h)
     temporaries stay cache-sized — one big batch measured 8× slower cold
     from allocator churn); anything unusual (missing payload, bad magic,
-    truncated zlib, shape mismatch) takes the scalar ``validate_row`` path
-    so every legacy edge case keeps byte-identical verdicts.
+    truncated zlib, shape mismatch, a side shorter than the 8×8 phash
+    grid) takes the scalar ``validate_row`` path so every legacy edge case
+    keeps byte-identical verdicts.
 
     Exactness notes: pixel values are uint8, so squared-error partial sums
     stay integers < 2^53 — float64 summation is order-independent and the
@@ -187,11 +187,12 @@ def validate_rows(
             # bufsize=wh: the output size is known exactly — skips the
             # default 16 KB first allocation + shrink per payload
             raw = decompress(b[9:], bufsize=wh)
-            if (dw, dh) != (w, h) or len(raw) != wh:
+            if (dw, dh) != (w, h) or len(raw) != wh or w < 8 or h < 8:
                 raise ValueError("shape")
         except Exception:
             # scalar fallback reproduces the legacy verdict exactly (422 on
-            # bad payloads, and the odd broadcastable-shape corner cases)
+            # bad payloads and on images too small for the 8×8 phash
+            # block grid, and the odd broadcastable-shape corner cases)
             s, p, a, bb, c = validate_row(
                 bytes(b), image_ids[j], w, h, fmts[j], captions[j],
                 int(phashes[j]),
@@ -210,7 +211,7 @@ def validate_rows(
         # buffers cache-sized at EVERY image size (swept 32×32: 2048 rows
         # beats 512 by ~3%; 128×128: 128 rows beats 512 by ~25%; one big
         # batch measured 8× slower cold from allocator churn)
-        rows_chunk = chunk or max(16, (2 << 20) // wh)
+        rows_chunk = max(16, (2 << 20) // wh)
         for c0 in range(0, len(idx_list), rows_chunk):
             jlist = idx_list[c0 : c0 + rows_chunk]
             idx = np.asarray(jlist)

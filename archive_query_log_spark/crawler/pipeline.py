@@ -4,10 +4,12 @@ One crawl *round* = one batch job (the reference's own incrementality model,
 SURVEY.md §2.11 — worklist flags, not a stream processor):
 
     frontier(immutable) ⟕anti fetch-log ──▶ seen-filter (bloom → exact)
-        ──▶ robots join ──▶ politeness schedule (salted per-host waves)
-        ──▶ fetch+validate (mapInPandas over images join)
+        ──▶ robots join ──▶ politeness schedule (per-host waves, ranked
+            over score buckets so a hot host spreads across tasks)
+        ──▶ fetch+validate (one Arrow pass per distinct payload,
+            verdicts joined back onto the scheduled fetches)
         ──▶ commits (append-only): fetches++, seen_keys++,
-                     seen_shards (rebuilt), metrics++
+                     seen_shards (Bloom bits OR-updated), metrics++
 
 The frontier is never rewritten: worklist state (fetched? when?) derives
 from the appended fetch log — the reference's in-place ES flag updates
@@ -27,7 +29,8 @@ the multi-table transaction the reference gets from ES create-if-absent ops
 
 Reproducibility: all ordering derives from md5-based scores + url_key
 tiebreaks → the schedule (wave, dispatch_ts per url) is identical at any
-parallelism (tested local[8] vs local[32]).
+parallelism (a test schedules a repartitioned input; the crawl goldens
+pin full rounds against a pure-Python twin).
 """
 
 from __future__ import annotations
@@ -48,10 +51,8 @@ T0 = "2024-01-01 00:00:00"
 @dataclass
 class CrawlConfig:
     budget_waves: int = 8           # per-host dispatch budget per round
-    salt_partitions: int = 8        # hot-host window salting
     n_buckets: int = 32             # seen-set shard count
     seed: int = 42
-    use_bloom: bool = True
     # re-poll clock (F2): rows fetched before now − 4 weeks become eligible
     # again as REFRESHES (they bypass the seen-set — the reference re-polls
     # sources with from_timestamp deltas, captures/__init__.py:28,45-50,
@@ -80,7 +81,7 @@ def init_state(root: str | Path, frontier_df: DataFrame) -> CrawlState:
     return state
 
 
-def candidates(frontier: DataFrame, now: str | None = None) -> DataFrame:
+def candidates(frontier: DataFrame) -> DataFrame:
     """Static gates: flag-pending ∧ valid-URL ∧ status-200 (F1/F7/F8).
 
     Fetch history is NOT read from frontier columns — the frontier is
@@ -88,7 +89,6 @@ def candidates(frontier: DataFrame, now: str | None = None) -> DataFrame:
     (see ``eligible_work``): rewriting a 10^10-row frontier to flip flags
     every round would be an O(frontier) write; an appended log row is O(1).
     """
-    del now  # retained for signature compat; re-poll lives in eligible_work
     from archive_query_log_spark.functions import urls
 
     return (
@@ -161,7 +161,7 @@ def _shard_bytes_meta(written: DataFrame) -> dict:
     Bloom-blob bytes. Static per snapshot — computing it here (one
     n_buckets-row agg over the just-written files, once per round's commit)
     lets every later probe construction skip its own layout-decision job."""
-    return {"shard_total_bytes": seen_set.shard_total_bytes(written, "bloom")}
+    return {"shard_total_bytes": seen_set.shard_total_bytes(written)}
 
 
 def next_round_id(state: CrawlState) -> int:
@@ -208,9 +208,7 @@ def run_round(
     new = seen_set.first_seen_in_batch(score(new), "url_key", "ts")
     seen = state.seen_keys.read(spark, seen_ver) if seen_ver is not None else None
     shards = (
-        state.seen_shards.read(spark, shard_ver)
-        if (cfg.use_bloom and shard_ver is not None)
-        else None
+        state.seen_shards.read(spark, shard_ver) if shard_ver is not None else None
     )
     # manifest-stashed snapshot size (committed by _shard_bytes_meta) —
     # probes of older snapshots (pre-stash manifests) fall back to the agg
@@ -229,12 +227,11 @@ def run_round(
             .withColumn("is_refresh", F.lit(True))
         )
 
-    # politeness: robots rules + salted per-host wave ranking
+    # politeness: robots rules + per-host wave ranking
     allowed = politeness.apply_robots(fresh, robots, "url", "host")
     scheduled = politeness.schedule(
         allowed.withColumn("t0", F.to_timestamp(F.lit(T0))),
         budget_waves=cfg.budget_waves,
-        salt_partitions=cfg.salt_partitions,
     ).drop("t0")
 
     # fetch + validate; cache: used for fetches commit, seen update, metrics.
@@ -262,19 +259,18 @@ def run_round(
         .dropDuplicates(["url_key"])
     )
     _commit_once(state.seen_keys, new_keys, "append", round_id)
-    if cfg.use_bloom:
-        bloom_cfg = seen_set.BloomConfig(n_buckets=cfg.n_buckets)
-        all_keys = state.seen_keys.read(spark)
-        if shards is None:
-            next_shards = seen_set.build_bloom_shards(all_keys, "url_key", bloom_cfg)
-        else:
-            # incremental: OR new keys into existing bitmaps; per-bucket
-            # rebuild only on capacity overflow — O(new), not O(seen)
-            next_shards = seen_set.update_bloom_shards(
-                shards, new_keys, all_keys, "url_key", bloom_cfg
-            )
-        _commit_once(state.seen_shards, next_shards, "overwrite", round_id,
-                     post_write_meta=_shard_bytes_meta)
+    bloom_cfg = seen_set.BloomConfig(n_buckets=cfg.n_buckets)
+    all_keys = state.seen_keys.read(spark)
+    if shards is None:
+        next_shards = seen_set.build_bloom_shards(all_keys, "url_key", bloom_cfg)
+    else:
+        # incremental: OR new keys into existing bitmaps; per-bucket
+        # rebuild only on capacity overflow — O(new), not O(seen)
+        next_shards = seen_set.update_bloom_shards(
+            shards, new_keys, all_keys, "url_key", bloom_cfg
+        )
+    _commit_once(state.seen_shards, next_shards, "overwrite", round_id,
+                 post_write_meta=_shard_bytes_meta)
 
     # NOTE: no frontier write — the reference flips should_fetch/last_fetched
     # in place (an ES doc update); at 10^10 rows the columnar equivalent is a

@@ -1118,8 +1118,8 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: LSH candidate pairs → connected
     components → (node, cluster_id = min doc id in component) — the
     keep-one-per-duplicate-cluster step of a training-data dedup pipeline
-    (min-label propagation; the DuckDB oracle is a recursive CTE over the
-    same pairs)."""
+    (driver union-find below the size cutover, large-star/small-star
+    above it; the DuckDB oracle is a recursive CTE over the same pairs)."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     pairs = dedup.minhash_lsh_candidates(
         d, "text", "doc_id", num_perm=8, bands=4, shingle_k=3
@@ -1359,8 +1359,8 @@ def dedup_simhash_combo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("dedup_simhash", _simhash_oracle(32, 7))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash document sketches (portable 32-bit variant; the fast 64-bit
-    xxhash64 variant is operators/dedup.py:simhash64)."""
+    """SimHash document sketches (32-bit, md5 token hashes — bit-identical
+    in the DuckDB oracle)."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     return dedup.simhash32_md5(d, "text", "doc_id", seed=7)
 
@@ -2107,7 +2107,7 @@ def a2_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 proper: approx_count_distinct (HLL, rsd 0.02 ≈ the reference's
     precision_threshold=40000, serps.py:272-278). Rows-only check — Spark's
     and DuckDB's HLL sketches legitimately differ; the ±5% tolerance test is
-    tests/test_bundles_cuckoo.py::test_approx_distinct_tolerance and the
+    tests/test_approx_distinct.py::test_approx_distinct_tolerance and the
     exact twin is a2_distinct_users."""
     return (
         _t(spark, sf_dir, "events")
@@ -2731,7 +2731,7 @@ def crawl_pipeline_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # §2.9 with the reference's REAL rule tables: 972 url→query + 425 url→page +
-# 66 url→offset rules through the broadcast-join cascade, hash-gated against
+# 66 url→offset rules through the broadcast-array cascade, hash-gated against
 # goldens computed by the reference parser logic itself
 # (tools/reference_rule_oracle.py over tools/make_rule_corpus.py's corpus).
 # ---------------------------------------------------------------------------
@@ -2956,7 +2956,7 @@ def w4_reference_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the zero-shuffle array cascade plan over a 4,129-URL corpus covering
     every reachable rule (parsers/url_query.py:216-5916,
     url_page.py:60-2711, url_offset.py:60-571 as DATA; engine =
-    operators/cascade.py — all three plans equality-tested in
+    operators/cascade.py — tested against the reference parses in
     tests/test_reference_rules.py)."""
     from archive_query_log_spark.operators.cascade import apply_cascade_array
     from archive_query_log_spark.operators.rule_tables import reference_rules_df

@@ -6,117 +6,20 @@ parse returns non-null, wins; no-match still yields a progress update
 (/root/reference/archive_query_log/parsers/url_query.py:49-59 applicability,
 :107-174 cascade; same pattern in url_page.py / url_offset.py).
 
-Spark-first design: the rule table is DATA (a Python list compiled once, or a
-broadcast table unrolled), and the whole cascade compiles to ONE ``coalesce``
-over per-rule ``when(applicable, extract)`` expressions — the 972-rule
-url→query cascade becomes a single whole-stage-codegen projection instead of
-a per-row Python loop. Rules here are OUR OWN fixtures; the reference's rule
-tables are data files a deployment would import, not code to copy.
+Spark-first design: the rule table is DATA (a small DataFrame, see
+``operators.rule_tables``). ``apply_cascade_array`` broadcasts each
+provider's rules as an array and evaluates the first-match cascade as ONE
+higher-order-function projection per row — the 972-rule url→query cascade
+costs rules-per-provider evaluations per row, with no per-row Python loop
+and no shuffle of the data side.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from archive_query_log_spark.functions import text as T
 from archive_query_log_spark.functions import urls as U
-
-
-@dataclass(frozen=True)
-class UrlRule:
-    """One parser rule (mirrors the reference's QueryParser model fields,
-    parsers/url_query.py:65-104)."""
-
-    rule_type: str  # 'query_param' | 'fragment_param' | 'path_segment'
-    argument: str | int
-    provider_id: str | None = None  # None = applicable to any provider
-    url_pattern: str | None = None  # regex; None = applicable to any URL
-    remove_pattern: str | None = None
-    space_pattern: str | None = None
-
-
-def _extract(rule: UrlRule, url: Column) -> Column:
-    if rule.rule_type == "query_param":
-        return U.parse_url_query_parameter(str(rule.argument), url)
-    if rule.rule_type == "fragment_param":
-        return U.parse_url_fragment_parameter(str(rule.argument), url)
-    if rule.rule_type == "path_segment":
-        return U.parse_url_path_segment(int(rule.argument), url)
-    raise ValueError(rule.rule_type)
-
-
-def compile_cascade(
-    rules: list[UrlRule],
-    url: Column,
-    provider: Column | None = None,
-    as_int: bool = False,
-) -> Column:
-    """Rule table → one coalesce(when(applicable, cleaned_extract), ...).
-
-    First applicable rule whose parse yields non-null wins — exactly the
-    reference's loop, minus the loop.
-    """
-    branches: list[Column] = []
-    for r in rules:
-        applicable = F.lit(True)
-        if r.provider_id is not None and provider is not None:
-            applicable = applicable & (provider == r.provider_id)
-        if r.url_pattern is not None:
-            applicable = applicable & url.rlike(r.url_pattern)
-        raw = _extract(r, url)
-        val = (
-            T.clean_int(raw, r.remove_pattern)
-            if as_int
-            else T.clean_text(raw, r.remove_pattern, r.space_pattern)
-        )
-        branches.append(F.when(applicable, val))
-    if not branches:
-        return F.lit(None).cast("bigint" if as_int else "string")
-    return F.coalesce(*branches)
-
-
-def rules_to_df(spark, rules: list[UrlRule]):
-    """Rule table as data (rule_order = cascade precedence)."""
-    rows = [
-        (
-            i,
-            r.rule_type,
-            str(r.argument),
-            r.provider_id,
-            r.url_pattern,
-            r.remove_pattern,
-            r.space_pattern,
-        )
-        for i, r in enumerate(rules)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rule_order int, rule_type string, argument string, provider_id string,"
-        " url_pattern string, remove_pattern string, space_pattern string",
-    )
-
-
-def _extract_dynamic(url: Column, rule_type: Column, arg: Column) -> Column:
-    """One 3-branch extraction expression over DYNAMIC rule columns or
-    struct fields — the key to both scale plans: the expression count stays
-    constant no matter how many rules exist."""
-    url = U.lenient_url(url)  # same malformed-escape leniency as compile_cascade
-    qp = U.parse_qsl_first(F.try_parse_url(url, F.lit("QUERY")), arg)
-    fp = U.parse_qsl_first(F.try_parse_url(url, F.lit("REF")), arg)
-    seg = U.percent_decode(
-        F.try_element_at(
-            F.split(F.coalesce(F.try_parse_url(url, F.lit("PATH")), F.lit("")), "/"),
-            arg.cast("int") + 1,
-        )
-    )
-    return (
-        F.when(rule_type == "query_param", qp)
-        .when(rule_type == "fragment_param", fp)
-        .when(rule_type == "path_segment", seg)
-    )
 
 
 def _clean_dynamic(
@@ -132,8 +35,7 @@ def _clean_dynamic(
         # clean_int semantics exactly (parsers/utils/__init__.py:21-33 and
         # functions.text.clean_int): remove_pattern → trim → try_cast. No
         # space_pattern substitution and no whitespace collapse — clean_int
-        # takes no space_pattern, so an int rule carrying one must behave
-        # identically in every cascade plan.
+        # takes no space_pattern, so an int rule carrying one ignores it.
         return F.trim(cleaned).try_cast("long")
     cleaned = F.when(
         space_pattern.isNotNull(),
@@ -174,10 +76,9 @@ def apply_cascade_array(
     higher-order functions — transform(rules, r → cleaned extract) then
     first non-null. No groupBy, no join-back: the plan is scan → broadcast
     join → project, so it composes into any pipeline without adding an
-    exchange (apply_cascade_join needs 3: winner agg + both join-back
-    sides). Per-row cost is identical (rules-per-provider evaluations).
-    Equality-tested against apply_cascade_join and compile_cascade on the
-    reference's real rule tables."""
+    exchange. Per-row cost is rules-per-provider evaluations. Tested
+    against the reference parser's outputs on the real rule tables
+    (tests/test_reference_rules.py)."""
     spec = rules_df.where(F.col("provider_id").isNotNull())
     univ_rows = (
         rules_df.where(F.col("provider_id").isNull())
@@ -253,8 +154,7 @@ def apply_cascade_array(
     # the same rule order, but once the accumulator holds a hit the
     # when() guard skips the whole evaluation branch, so a row costs
     # (rules until first hit) instead of (all rules). Identical first-
-    # non-null-by-rule_order semantics (equality-tested vs compile_cascade
-    # and apply_cascade_join on the real tables).
+    # non-null-by-rule_order semantics.
     vtype = "long" if as_int else "string"
     zero = F.struct(
         F.lit(None).cast(vtype).alias("v"), F.lit(None).cast("int").alias("o")
@@ -297,81 +197,3 @@ def apply_cascade_array(
         "_url", "_prov", "_rp", "_prules", "_lu", "_q", "_ref", "_psegs",
         "_cacc",
     )
-
-
-def apply_cascade_join(
-    df,
-    rules_df,
-    url: Column,
-    provider: Column,
-    id_col: str,
-    out_col: str = "query",
-    as_int: bool = False,
-    out_rule_col: str | None = None,
-):
-    """The materialized-hits plan for large rule tables: broadcast the rule
-    TABLE, equi-join provider-specific rules on provider_id (fan-out =
-    rules-per-provider, typically 1-3), cross-join the few universal rules,
-    evaluate ONE generic extraction expression, and keep the first (lowest
-    rule_order) non-null parse per row via min_by — identical semantics to
-    compile_cascade (tested), per-row cost O(matching rules), not O(all
-    rules): the 600-rule unrolled coalesce measured ~0.85 ms/row; this plan
-    is ~50× cheaper. Costs 3 exchanges (winner agg + join-back) — prefer
-    apply_cascade_array (zero-shuffle) unless you want the hits relation
-    itself."""
-    keyed = df.withColumn("_url", url).withColumn("_prov", provider)
-    # namespace the rule columns so they can never collide with df's own
-    # (a caller's df legitimately has e.g. its own provider_id column)
-    rules = rules_df.select(
-        *[F.col(c).alias(f"_r_{c}") for c in rules_df.columns]
-    )
-    specific = keyed.join(
-        F.broadcast(rules.where(F.col("_r_provider_id").isNotNull())),
-        on=F.col("_prov") == F.col("_r_provider_id"),
-        how="inner",
-    )
-    universal = keyed.crossJoin(
-        F.broadcast(rules.where(F.col("_r_provider_id").isNull()))
-    )
-    cand = specific.unionByName(universal)
-    applicable = F.col("_r_url_pattern").isNull() | F.expr(
-        "_url rlike _r_url_pattern"
-    )
-    raw = _extract_dynamic(
-        F.col("_url"), F.col("_r_rule_type"), F.col("_r_argument")
-    )
-    cleaned = _clean_dynamic(
-        raw, F.col("_r_remove_pattern"), F.col("_r_space_pattern"), as_int
-    )
-    hits = cand.where(applicable & cleaned.isNotNull()).select(
-        F.col(id_col), cleaned.alias("_val"), F.col("_r_rule_order")
-    )
-    aggs = [F.min_by("_val", "_r_rule_order").alias(out_col)]
-    if out_rule_col is not None:
-        # winning rule id = lowest rule_order among non-null parses — the
-        # reference's first-match loop index (url_query.py:118-126)
-        aggs.append(F.min("_r_rule_order").alias(out_rule_col))
-    winners = hits.groupBy(id_col).agg(*aggs)
-    return df.join(winners, on=id_col, how="left")
-
-
-# our own fixture rule tables (shape-parity with the reference's url_query /
-# url_page / url_offset tables; NOT copies of its 972-rule data file)
-FIXTURE_QUERY_RULES = [
-    UrlRule("query_param", "q", provider_id="alpha"),
-    UrlRule(
-        "query_param",
-        "query",
-        provider_id="beta",
-        remove_pattern=r"^\*+",
-    ),
-    UrlRule("path_segment", 2, provider_id="gamma", url_pattern=r"/find/"),
-    UrlRule("fragment_param", "q", provider_id="gamma"),
-    UrlRule("query_param", "search"),  # any-provider fallback
-]
-
-FIXTURE_PAGE_RULES = [
-    UrlRule("query_param", "page", provider_id="alpha"),
-    UrlRule("query_param", "p", provider_id="beta", remove_pattern=r"[^0-9]"),
-    UrlRule("path_segment", 3, provider_id="gamma", url_pattern=r"/find/"),
-]

@@ -440,33 +440,6 @@ def dedup_pipeline(
     ).withColumn("n_dups", F.coalesce(F.col("n_dups"), F.lit(1)))
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per document (xxhash64 token hashes — the fast path).
-
-    explode tokens → 64 conditional sums → reassemble bits. One shuffle.
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            )
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*aggs)
-    sim = None
-    for b in range(64):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, b)
-        sim = term if sim is None else sim.bitwiseXOR(term)
-    return agg.select(F.col(id_col), sim.alias("simhash"))
-
-
 def simhash32_md5(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", seed: int = 7
 ) -> DataFrame:
@@ -504,8 +477,7 @@ def hamming64(a: Column, b: Column) -> Column:
 # behavior — a CC round-count regression otherwise looks identical to
 # machine contention in the wall-clock number. `edges` is the DEDUPED
 # ONE-DIRECTIONAL edge count, recorded only where a path computes it
-# anyway (star: checksum pass; local: collected list); the minlabel twin
-# records None rather than pay a count() job for telemetry.
+# anyway (star: checksum pass; local: collected list).
 #
 # Thread-LOCAL (not a module global): concurrent CC calls from parallel
 # entries in one session would otherwise overwrite each other and bench.py
@@ -544,7 +516,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    method: str = "star",
     local_threshold: int = 100_000,
 ) -> DataFrame:
     """Duplicate-CLUSTER assignment: connected components over candidate
@@ -552,19 +523,13 @@ def connected_components(
     "keep one document per duplicate cluster" step that follows pairwise
     candidate generation in a training-data dedup pipeline.
 
-    method='star' (default, the 100 TB plan): alternating
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) — each round is two
-    groupBy-min + join passes over the shrinking edge list and the round
-    count is O(log n) in the worst case, so an adversarial 10^6-node chain
+    Distributed plan: alternating large-star/small-star contraction
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14) — each round is two groupBy-min + join passes over the
+    shrinking edge list and the round count is O(log n) in the worst
+    case, so an adversarial 10^6-node chain
     (spam mirror rings, boilerplate chains) finishes in ~20 rounds where
     diameter-bound label propagation needs 10^6.
-
-    method='minlabel': per-iteration min-label propagation — ONE equi-join
-    + min agg per round, converging in O(component diameter) rounds. Kept
-    as the small-scale twin because its per-round plan is the cheapest when
-    clusters are shallow, and it mirrors the recursive-CTE oracle
-    step-for-step.
 
     Small-graph cutover (AQE-local-mode style): when the deduped edge list
     is at most ``local_threshold`` rows (a few MB — metadata-sized, like a
@@ -572,18 +537,16 @@ def connected_components(
     the driver instead of O(log n) Spark rounds whose fixed job latency
     would dominate. Identical labels by construction; the distributed path
     takes over exactly when the data stops being collectable. Set
-    ``local_threshold=0`` to force the distributed algorithms (the
-    equality tests do).
+    ``local_threshold=0`` to force the distributed plan (the equality
+    tests do).
 
-    Both distributed variants are deterministic (labels = component-min
-    id, independent of partitioning), interchangeable bit-for-bit —
-    equality-tested on chains, rings, stars and random graphs — and fail
-    loudly on non-convergence rather than returning a silently-split
-    component. localCheckpoint() cuts lineage each round (iterative plans
-    otherwise grow exponentially).
+    The distributed plan is deterministic (labels = component-min id,
+    independent of partitioning), equal to the driver union-find
+    bit-for-bit — equality-tested on chains, rings, stars and random
+    graphs — and fails loudly on non-convergence rather than returning a
+    silently-split component. localCheckpoint() cuts lineage each round
+    (iterative plans otherwise grow exponentially).
     """
-    if method not in ("star", "minlabel"):
-        raise ValueError(f"method must be star|minlabel, got {method!r}")
     if local_threshold:
         fwd = pairs.select(
             F.col(id_a).alias("x"), F.col(id_b).alias("y")
@@ -594,57 +557,12 @@ def connected_components(
             return _cc_local(
                 pairs.sparkSession, edges, pairs.schema[id_a].dataType
             )
-    if method == "star":
-        return _cc_star(pairs, id_a, id_b, max_iter)
-    fwd = pairs.select(F.col(id_a).alias("x"), F.col(id_b).alias("y"))
-    edges = fwd.union(
-        fwd.select(F.col("y").alias("x"), F.col("x").alias("y"))
-    ).distinct()
-    edges = edges.localCheckpoint()
-    # edges=None: the minlabel twin does not pay a count() job just for
-    # telemetry (star/local record the deduped one-directional edge count
-    # as a byproduct of work they do anyway)
-    _cc_note(method="minlabel", rounds=0, edges=None, cutover=False)
-    labels = edges.select("x").distinct().withColumn("lbl", F.col("x"))
-    for _round in range(max_iter):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("x", "y"), on="y")
-            .groupBy("x")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr_min, on="x", how="left")
-            .select(
-                "x",
-                F.least(
-                    F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.withColumnRenamed("lbl", "new_lbl")
-            .join(labels, on="x")
-            .where(F.col("new_lbl") != F.col("lbl"))
-            .count()
-        )
-        labels = new_labels
-        _cc_note(rounds=_round + 1)
-        if changed == 0:
-            break
-    else:
-        # no silent cap: labels that haven't converged are WRONG (a long
-        # chain would report one component as several) — fail loudly
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations"
-            " — raise max_iter (component diameter exceeds it)"
-        )
-    return labels.select(F.col("x").alias("node"), F.col("lbl").alias("cluster_id"))
+    return _cc_star(pairs, id_a, id_b, max_iter)
 
 
 def _cc_local(spark, edge_rows, id_type) -> DataFrame:
     """Driver-side union-find over a collected (metadata-sized) edge list;
-    labels = component-min id, bit-identical to the distributed paths.
+    labels = component-min id, bit-identical to the distributed plan.
 
     The label frame is built JVM-side (one JSON literal via from_json +
     inline) for long/int/string ids: `createDataFrame(rows)` routes the
@@ -780,7 +698,7 @@ def _cc_star(
         sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components(star) did not converge in {max_iter}"
+            f"connected_components did not converge in {max_iter}"
             " rounds — pathological input (rounds are O(log n), so this"
             " indicates a bug or a graph far larger than max_iter=50 covers)"
         )
@@ -982,7 +900,7 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs = the md5 32-bit signature writer feeding the
     generic ``hamming_near_pairs`` pigeonhole join (bit-exact DuckDB
-    oracle; swap in simhash64/xxhash at scale: same plan, stronger hash).
+    oracle; an xxhash64 token hash would feed the same plan at scale).
     """
     sig = simhash32_md5(df, text_col, id_col, seed=seed).select(
         F.col(id_col).alias("id"), F.col("simhash32").alias("sig")

@@ -9,15 +9,15 @@ crawl-delay window, higher-scored URLs first. The north_rule adds robots.txt
 rules + per-host crawl delay as a first-class rules table.
 
 Scale design:
-- The per-host ranking is a window over ``host`` — a skewed shuffle when one
-  host owns 30%+ of the frontier. ``salt_partitions`` > 1 enables a two-phase
-  exact top-k: rank within (host, salt) first, keep only ranks ≤ budget, then
-  re-rank the survivors per host. The heavy first phase spreads the hot host
-  over N partitions; the second phase sees ≤ salt·budget rows per host.
-  Semantics are exactly identical to the unsalted plan (proved in tests).
+- The per-host ranking would be a window over ``host`` — a skewed shuffle
+  when one host owns 30%+ of the frontier. Instead the rank is stitched
+  from windows over (host, score bucket) plus per-bucket offsets
+  (``_skewproof_host_rank``), so the hot host spreads over its score
+  buckets. Semantics are exactly the per-host window's (tests replay the
+  schedule through a per-host rate-limiter simulation).
 - All ordering keys are deterministic and partition-invariant (md5-based
-  score, url_key tiebreak): the schedule is byte-identical at local[8] and
-  local[32] — the BASELINE.json reproducibility requirement.
+  score, url_key tiebreak): the schedule does not depend on how its input
+  is partitioned — the BASELINE.json reproducibility requirement.
 """
 
 from __future__ import annotations
@@ -171,8 +171,6 @@ def schedule(
     delay_col: str | None = "crawl_delay_s",
     t0_col: str = "t0",
     budget_waves: int | None = None,
-    salt_partitions: int = 1,
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Assign (wave, dispatch_ts) per candidate: the politeness queue.
 
@@ -189,24 +187,19 @@ def schedule(
     sort of the frontier and, at large budgets, pruned nothing while still
     funneling each hot host through a single final-ranking task (measured
     ~2.4 s → ~1.1 s on the 2M-URL bench schedule stage). EXACTLY equal to
-    the naive per-host window (tests prove it); ``salt_partitions`` is
-    kept for API compatibility and ignored.
+    the naive per-host window (tests prove it).
 
-    ``materialize_input`` (default True): the two-phase rank reads its
-    input TWICE — once for the bucket-counts aggregate, once for the
-    ranking pass — and Spark does NOT share the common lineage between the
-    two branches (column pruning makes the subplans canonically different,
-    so even a shared upstream shuffle re-executes per branch).
-    localCheckpoint() materializes the candidate set once (eager,
-    partition-local, memory+disk), so the counts pass re-reads rows
-    instead of re-running the caller's score → dedup → robots chain:
-    measured 8.9 → 7.2 s best / 11.1 → 8.6 s median on the full 2M-URL
-    crawl job in one interleaved A/B session. Pass False when upstream
-    recompute is cheaper than materializing (e.g. the input is a bare
-    scan or already cached).
+    The input is localCheckpointed first: the two-phase rank reads it
+    TWICE — once for the bucket-counts aggregate, once for the ranking
+    pass — and Spark does NOT share the common lineage between the two
+    branches (column pruning makes the subplans canonically different, so
+    even a shared upstream shuffle re-executes per branch). Materializing
+    the candidate set once (eager, partition-local, memory+disk) lets the
+    counts pass re-read rows instead of re-running the caller's score →
+    dedup → robots chain: measured 8.9 → 7.2 s best / 11.1 → 8.6 s median
+    on the full 2M-URL crawl job in one interleaved A/B session.
     """
-    if materialize_input:
-        candidates = candidates.localCheckpoint()
+    candidates = candidates.localCheckpoint()
     out = _skewproof_host_rank(
         candidates, host_col, score_col, key_col, budget=budget_waves
     )

@@ -5,13 +5,10 @@ The JSON files under ``archive_query_log_spark/data/`` are declarative rule
 DATA extracted verbatim from the reference's public, MIT-licensed tables
 (/root/reference/archive_query_log/parsers/url_query.py:216-5916,
 url_page.py:60-2711, url_offset.py:60-571) by
-``tools/extract_reference_rules.py``. This module turns them into
-
-- a broadcast-ready rules DataFrame for
-  :func:`archive_query_log_spark.operators.cascade.apply_cascade_join`
-  (the scale plan: per-row cost = rules-per-provider, not all-rules), and
-- ``UrlRule`` lists for :func:`compile_cascade` (the unrolled-coalesce plan,
-  useful for small per-provider subsets).
+``tools/extract_reference_rules.py``. This module turns them into a
+broadcast-ready rules DataFrame for
+:func:`archive_query_log_spark.operators.cascade.apply_cascade_array`
+(per-row cost = rules-per-provider, not all-rules).
 
 Match-semantics shim: the reference applies ``url_pattern`` with
 ``re.match`` (anchored at position 0, url_query.py:54-58); Spark ``rlike``
@@ -24,7 +21,7 @@ Input-normalization precondition: the reference matches against
 (lowercased/punycoded host, default '/' path, default port stripped), NOT
 the raw URL (url_query.py:56). Feed raw frontier URLs through
 ``functions.urls.normalize_http_url`` (pure columns; ASCII hosts) or
-``normalize_http_url_udf`` (pydantic-exact) before apply_cascade_*, or an
+``normalize_http_url_udf`` (pydantic-exact) before apply_cascade_array, or an
 anchored pattern the reference would match can miss
 (e.g. ``https://Google.com?q=x``). Raw-variant parity gate:
 tests/test_reference_rules.py::test_cascade_on_raw_urls_via_normalization.
@@ -38,8 +35,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from archive_query_log_spark.operators.cascade import UrlRule
 
 DATA_DIR = Path(__file__).resolve().parent.parent / "data"
 
@@ -91,7 +86,7 @@ def load_rule_rows(table: str) -> tuple[dict, ...]:
 
 def reference_rules_df(spark: SparkSession, table: str) -> DataFrame:
     """Rule table as a (tiny, broadcastable) DataFrame with url_pattern
-    wrapped for find-anywhere engines — feed straight to apply_cascade_join.
+    wrapped for find-anywhere engines — feed straight to apply_cascade_array.
     """
     records = [
         {
@@ -146,25 +141,3 @@ def reference_providers_df(spark: SparkSession) -> DataFrame:
     # boundary entirely: → ~0.06 s per rebuild)
     return local_json_df(spark, records, PROVIDERS_DF_SCHEMA)
 
-
-def reference_rules(table: str, provider_id: str | None = None) -> list[UrlRule]:
-    """Rule list for compile_cascade, optionally filtered to one provider."""
-    out = []
-    for r in load_rule_rows(table):
-        if provider_id is not None and r["provider_id"] != provider_id:
-            continue
-        out.append(
-            UrlRule(
-                rule_type=r["rule_type"],
-                argument=(
-                    int(r["argument"])
-                    if r["rule_type"] == "path_segment"
-                    else r["argument"]
-                ),
-                provider_id=r["provider_id"],
-                url_pattern=match_anchored(r["url_pattern"]),
-                remove_pattern=r["remove_pattern"],
-                space_pattern=r["space_pattern"],
-            )
-        )
-    return out

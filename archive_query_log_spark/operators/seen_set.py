@@ -1,5 +1,5 @@
 """URL-seen set: deterministic-ID + create-if-absent semantics at scale
-(SURVEY.md §1.4 item 2; north_rule bloom/cuckoo requirement).
+(SURVEY.md §1.4 item 2; north_rule Bloom requirement).
 
 Reference semantics reproduced: a URL is "seen" iff its canonical key already
 exists — the reference gets this from deterministic uuid5 IDs + Elasticsearch
@@ -17,8 +17,9 @@ sources/__init__.py:56). The rebuild:
    candidates that can be false positives) fall back to the exact anti-join,
    which now touches only ~fpp · batch rows. Zero false negatives by
    construction → final seen set is *exactly* the reference's.
-3. **Cuckoo-shard path**: same sharding, 16-bit fingerprints, supports
-   deletion (Bloom cannot) — used when captures are retracted.
+
+No key ever leaves the seen set (refreshes bypass it and nothing retracts
+captures), so the Bloom shards need no deletion-capable twin.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -164,7 +165,7 @@ def build_bloom_shards(
 _BROADCAST_SHARDS_MAX_BYTES = 256 << 20
 
 
-def shard_total_bytes(shards: DataFrame, kind: str = "bloom") -> int:
+def shard_total_bytes(shards: DataFrame) -> int:
     """Summed filter-blob bytes of a shard table (an n_buckets-row agg).
 
     The number is STATIC per shard snapshot — compute it once when the
@@ -172,8 +173,7 @@ def shard_total_bytes(shards: DataFrame, kind: str = "bloom") -> int:
     crawl pipeline does) and pass it to the probes as ``shard_size_bytes``
     so layout auto-selection stops costing one Spark job per probe
     construction."""
-    expr = _bloom_size_bytes() if kind == "bloom" else _cuckoo_size_bytes()
-    total = shards.agg(F.sum(expr).alias("b")).first()["b"]
+    total = shards.agg(F.sum(_bloom_size_bytes()).alias("b")).first()["b"]
     return int(total) if total is not None else 0
 
 
@@ -183,13 +183,9 @@ def _probe_with_layout(
     key_col: str,
     n_buckets: int | None,
     broadcast_shards: bool | None,
-    meta_cols: tuple[str, ...],
-    kernel,
-    size_bytes_fn,
     shard_size_bytes: int | None = None,
 ):
-    """Shared layout machinery for the sharded-filter probes (Bloom and
-    cuckoo differ only in their per-bucket membership ``kernel``).
+    """Layout machinery of the Bloom-shard probe.
 
     The filter blobs never ride per-row: at 10M seen keys a shard bitmap
     is ~0.5 MB, and a join-then-probe layout (the pre-round-6
@@ -227,9 +223,9 @@ def _probe_with_layout(
         total = (
             shard_size_bytes
             if shard_size_bytes is not None
-            else shards.agg(F.sum(size_bytes_fn()).alias("b")).first()["b"]
+            else shard_total_bytes(shards)
         )
-        broadcast_shards = total is not None and int(total) <= _BROADCAST_SHARDS_MAX_BYTES
+        broadcast_shards = total <= _BROADCAST_SHARDS_MAX_BYTES
     hashed = with_hashes(batch, key_col, n_buckets)
     keep = [f for f in hashed.schema.fields if f.name not in ("_h1", "_h2")]
     keep_names = [f.name for f in keep]
@@ -237,10 +233,8 @@ def _probe_with_layout(
 
     if broadcast_shards:
         shard_map = {
-            int(r["bucket"]): {
-                c: (bytes(r[c]) if c == "bits" else r[c]) for c in meta_cols
-            }
-            for r in shards.select("bucket", *meta_cols).collect()
+            int(r["bucket"]): (bytes(r["bits"]), int(r["m"]), int(r["k"]))
+            for r in shards.select("bucket", "bits", "m", "k").collect()
         }
         bc = batch.sparkSession.sparkContext.broadcast(shard_map)
 
@@ -254,8 +248,8 @@ def _probe_with_layout(
                     ent = sm.get(int(b))
                     if ent is None:
                         continue
-                    maybe[grp.index.to_numpy()] = kernel(
-                        ent, grp["_h1"].to_numpy(), grp["_h2"].to_numpy()
+                    maybe[grp.index.to_numpy()] = _bloom_kernel(
+                        *ent, grp["_h1"].to_numpy(), grp["_h2"].to_numpy()
                     )
                 out = pdf[keep_names].copy()
                 out["maybe_seen"] = maybe
@@ -267,16 +261,10 @@ def _probe_with_layout(
         batch_pdf = batch_pdf.reset_index(drop=True)
         maybe = np.zeros(len(batch_pdf), dtype=bool)
         if len(shard_pdf) and len(batch_pdf):
-            ent = {
-                c: (
-                    bytes(shard_pdf[c].iloc[0])
-                    if c == "bits"
-                    else shard_pdf[c].iloc[0]
-                )
-                for c in meta_cols
-            }
-            maybe = kernel(
-                ent, batch_pdf["_h1"].to_numpy(), batch_pdf["_h2"].to_numpy()
+            r = shard_pdf.iloc[0]
+            maybe = _bloom_kernel(
+                bytes(r["bits"]), int(r["m"]), int(r["k"]),
+                batch_pdf["_h1"].to_numpy(), batch_pdf["_h2"].to_numpy(),
             )
         out = batch_pdf[keep_names].copy()
         out["maybe_seen"] = maybe
@@ -290,11 +278,12 @@ def _probe_with_layout(
     return probed, None
 
 
-def _bloom_kernel(ent: dict, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-    bits = np.frombuffer(ent["bits"], dtype=np.uint8)
-    m, k = int(ent["m"]), int(ent["k"])
+def _bloom_kernel(
+    bits: bytes, m: int, k: int, h1: np.ndarray, h2: np.ndarray
+) -> np.ndarray:
+    arr = np.frombuffer(bits, dtype=np.uint8)
     pos = _bloom_positions(h1, h2, k, m)
-    return ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=1)
+    return ((arr[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=1)
 
 
 def _bloom_size_bytes():
@@ -323,7 +312,6 @@ def bloom_probe(
     crawl. ``filtered_new`` does this housekeeping itself."""
     probed, bc = _probe_with_layout(
         batch, shards, key_col, n_buckets, broadcast_shards,
-        ("bits", "m", "k"), _bloom_kernel, _bloom_size_bytes,
         shard_size_bytes=shard_size_bytes,
     )
     if bc is not None and broadcast_out is not None:
@@ -430,376 +418,38 @@ def update_bloom_shards(
     return updated.unionByName(rebuilt)
 
 
-# ---------------------------------------------------------------------------
-# Cuckoo-filter shards: the deletion-capable variant (north_rule "cuckoo
-# fallback for deletions" — Bloom bits cannot be cleared per-key).
-# Layout per shard: M buckets × 4 slots of 16-bit fingerprints (0 = empty);
-# candidate buckets i1 = h1 mod M, i2 = i1 XOR (fp · 0x5bd1e995) mod M —
-# standard partial-key cuckoo hashing. Contains/delete are vectorized numpy;
-# insert is a per-key loop with bounded eviction (build-time only).
-# ---------------------------------------------------------------------------
-
-_CK_SLOTS = 4
-_CK_MIX = 0x5BD1E995
-
-
-class CuckooShard:
-    def __init__(self, n_keys: int):
-        m = 1
-        while m * _CK_SLOTS < n_keys * 1.3:
-            m *= 2
-        self.m = max(m, 64)
-        self.table = np.zeros((self.m, _CK_SLOTS), dtype=np.uint16)
-
-    @staticmethod
-    def _fp(h1: np.ndarray) -> np.ndarray:
-        # fingerprint from the HIGH bits — the bucket index consumes the low
-        # bits (h mod m), so fp and index must come from independent bits or
-        # every same-bucket fp shares log2(m) bits and fpp explodes
-        fp = ((h1.astype(np.uint64) >> np.uint64(32)) & np.uint64(0xFFFF)).astype(
-            np.uint16
-        )
-        return np.where(fp == 0, np.uint16(1), fp)
-
-    def _i1(self, h1: np.ndarray) -> np.ndarray:
-        return (h1.astype(np.uint64) % np.uint64(self.m)).astype(np.int64)
-
-    def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        # xor with the masked mix so partner() is an involution (m = 2^k):
-        # partner(partner(i)) == i — required for the eviction walk
-        mixed = (fp.astype(np.uint64) * np.uint64(_CK_MIX)) & np.uint64(self.m - 1)
-        return (i1.astype(np.uint64) ^ mixed).astype(np.int64)
-
-    def _partner(self, i: int, fp: int) -> int:
-        # scalar twin of _i2 (the vectorized form allocates arrays per call
-        # — too slow inside the per-key walk)
-        return i ^ ((fp * _CK_MIX) & (self.m - 1))
-
-    def insert_many(self, h1: np.ndarray, rng_seed: int = 7) -> None:
-        """Deterministic random-walk insertion (Fan et al. cuckoo-filter
-        shape): try both home buckets, then kick a pseudo-random slot of
-        the CURRENT bucket and follow the evicted fingerprint to ITS
-        partner. The eviction bucket must move every step — the previous
-        implementation evicted from the incoming key's alt bucket and, when
-        the evicted fp's partner was full, recomputed that same alt bucket
-        (partner is an involution), so the walk was trapped in an ≤8-bucket
-        neighborhood and builds failed at 56% load. Found by the round-7
-        12M-key soak (25k keys/bucket); the corrected walk fills to ~0.95
-        load, comfortably above the 0.77 build sizing. Slot choice uses the
-        LCG's HIGH bits (low bits of an LCG cycle with period 4)."""
-        fps = self._fp(h1)
-        i1s = self._i1(h1)
-        state = int(rng_seed)
-        table = self.table
-        for fp0, i0 in zip(fps, i1s):
-            fp = int(fp0)
-            i = int(i0)
-            row = table[i]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                row[empty[0]] = fp
-                continue
-            cur = self._partner(i, fp)
-            row = table[cur]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                row[empty[0]] = fp
-                continue
-            for _ in range(500):  # bounded eviction walk
-                state = (state * 6364136223846793005 + 1) % (1 << 64)
-                slot = (state >> 33) % _CK_SLOTS
-                fp, table[cur, slot] = int(table[cur, slot]), fp
-                cur = self._partner(cur, fp)
-                row = table[cur]
-                empty = np.flatnonzero(row == 0)
-                if len(empty):
-                    row[empty[0]] = fp
-                    break
-            else:
-                raise RuntimeError("cuckoo filter over capacity")
-
-    def contains_many(self, h1: np.ndarray) -> np.ndarray:
-        fps = self._fp(h1)
-        i1 = self._i1(h1)
-        i2 = self._i2(i1, fps)
-        t = self.table
-        hit1 = (t[i1] == fps[:, None]).any(axis=1)
-        hit2 = (t[i2] == fps[:, None]).any(axis=1)
-        return hit1 | hit2
-
-    def delete_many(self, h1: np.ndarray) -> int:
-        fps = self._fp(h1)
-        i1 = self._i1(h1)
-        i2 = self._i2(i1, fps)
-        deleted = 0
-        for fp, a, b in zip(fps, i1, i2):
-            for i in (int(a), int(b)):
-                row = self.table[i]
-                hits = np.flatnonzero(row == fp)
-                if len(hits):
-                    row[hits[0]] = 0
-                    deleted += 1
-                    break
-        return deleted
-
-    def to_bytes(self) -> bytes:
-        return self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, buf: bytes, m: int) -> "CuckooShard":
-        s = cls.__new__(cls)
-        s.m = m
-        s.table = np.frombuffer(buf, dtype=np.uint16).reshape(m, _CK_SLOTS).copy()
-        return s
-
-
-def _cuckoo_build_pdf(pdf: pd.DataFrame, n_buckets: int) -> pd.DataFrame:
-    """The one cuckoo shard-build closure (fresh builds AND rebuilds — a
-    single copy of the sizing rule keeps the two paths bit-compatible)."""
-    shard = CuckooShard(len(pdf))
-    shard.insert_many(pdf["_h2"].to_numpy())
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "bits": [shard.to_bytes()],
-            "m": [shard.m],
-            "k": [_CK_SLOTS],
-            "n": [len(pdf)],
-            "nb": [n_buckets],
-        }
-    )
-
-
-def build_cuckoo_shards(
-    keys: DataFrame, key_col: str = "url_key", n_buckets: int = 32
-) -> DataFrame:
-    """Per-bucket cuckoo filters — same sharding/join pattern as Bloom, plus
-    per-key deletion support (retracted captures)."""
-    hashed = with_hashes(
-        keys.select(key_col).dropDuplicates([key_col]), key_col, n_buckets
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _cuckoo_build_pdf(pdf, n_buckets)
-
-    return hashed.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
-
-
-# build sizing gives m·SLOTS ≥ 1.3·n (load ≈ 0.77); incremental adds keep
-# the same headroom — a bucket whose post-add occupancy would cross it is
-# rebuilt at the next power-of-two size. 4-slot cuckoo tables stay
-# insertable to ~0.95 load, so the eviction walk has margin below the
-# rebuild threshold.
-_CK_HEADROOM = 1.3
-
-
-def update_cuckoo_shards(
-    shards: DataFrame,
-    new_keys: DataFrame,
-    all_keys: DataFrame,
-    key_col: str = "url_key",
-) -> DataFrame:
-    """Incremental cuckoo maintenance — the deletion-capable twin of
-    ``update_bloom_shards`` (4-week-expiry crawls delete stale keys via
-    ``cuckoo_delete_keys`` and re-add them on re-fetch through here;
-    reference semantics: captures/__init__.py:28,163-176).
-
-    Same scale shape as the Bloom path: rebuild decisions come from a
-    METADATA join (per-bucket occupancy + add counts vs design capacity —
-    no table blob touched, no double execution), adds ride ONE
-    bucket-cogrouped pass as plain rows (never a collect_list array), and
-    overflowing buckets are rebuilt from ``all_keys`` (that bucket only)
-    through the same build closure as fresh builds.
-
-    ``new_keys`` must be keys not currently in the filter (the crawl's
-    novelty filter guarantees this); re-adding a still-present key would
-    store a second fingerprint copy, and a later delete removes only one.
-    """
-    nb = _shard_n_buckets(shards)
-    hashed = with_hashes(
-        new_keys.select(key_col).dropDuplicates([key_col]), key_col, nb
-    )
-    counts = hashed.groupBy("bucket").agg(F.count("*").alias("n_add"))
-    meta = (
-        shards.select("bucket", "m", "n")
-        .join(counts, on="bucket", how="full_outer")
-    )
-    rebuild = [
-        int(r["bucket"])
-        for r in meta.where(
-            F.col("m").isNull()  # adds into a bucket with no shard yet
-            | (
-                (F.col("n") + F.coalesce(F.col("n_add"), F.lit(0)))
-                * F.lit(_CK_HEADROOM)
-                > F.col("m") * F.lit(_CK_SLOTS)
-            )
-        )
-        .select("bucket")
-        .collect()
-    ]
-    kept_shards = shards
-    kept_adds = hashed.select("bucket", "_h2")
-    if rebuild:
-        kept_shards = kept_shards.where(~F.col("bucket").isin(rebuild))
-        kept_adds = kept_adds.where(~F.col("bucket").isin(rebuild))
-
-    def add_update(shard_pdf: pd.DataFrame, adds_pdf: pd.DataFrame):
-        if not len(shard_pdf):  # adds-only bucket → handled by rebuild leg
-            return pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
-        r = shard_pdf.iloc[0]
-        buf, m, n = r["bits"], int(r["m"]), int(r["n"])
-        if len(adds_pdf):
-            shard = CuckooShard.from_bytes(buf, m)
-            shard.insert_many(adds_pdf["_h2"].to_numpy())
-            buf, n = shard.to_bytes(), n + len(adds_pdf)
-        return pd.DataFrame(
-            {
-                "bucket": [int(r["bucket"])],
-                "bits": [buf],
-                "m": [m],
-                "k": [int(r["k"])],
-                "n": [n],
-                "nb": [int(r["nb"])],
-            }
-        )
-
-    updated = (
-        kept_shards.groupBy("bucket")
-        .cogroup(kept_adds.groupBy("bucket"))
-        .applyInPandas(add_update, SHARD_SCHEMA)
-    )
-    if not rebuild:
-        return updated
-    rb_keys = with_hashes(
-        all_keys.select(key_col).dropDuplicates([key_col]), key_col, nb
-    ).where(F.col("bucket").isin(rebuild))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _cuckoo_build_pdf(pdf, nb)
-
-    rebuilt = rb_keys.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
-    return updated.unionByName(rebuilt)
-
-
-def _cuckoo_kernel(ent: dict, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-    shard = CuckooShard.from_bytes(ent["bits"], int(ent["m"]))
-    return shard.contains_many(h2)
-
-
-def _cuckoo_size_bytes():
-    # cuckoo table is m buckets x 4 slots of 2-byte fingerprints
-    return F.col("m") * F.lit(_CK_SLOTS * 2)
-
-
-def cuckoo_probe(
-    batch: DataFrame,
-    shards: DataFrame,
-    key_col: str = "url_key",
-    n_buckets: int | None = None,
-    broadcast_shards: bool | None = None,
-    shard_size_bytes: int | None = None,
-    broadcast_out: list | None = None,
-) -> DataFrame:
-    """Adds ``maybe_seen``; zero false negatives, same contract as Bloom.
-    Layouts and auto-selection: see ``_probe_with_layout`` (a 10^10-key
-    cuckoo set is ~26 GB - past the broadcast cutover). ``broadcast_out``:
-    same release contract as ``bloom_probe``."""
-    probed, bc = _probe_with_layout(
-        batch, shards, key_col, n_buckets, broadcast_shards,
-        ("bits", "m"), _cuckoo_kernel, _cuckoo_size_bytes,
-        shard_size_bytes=shard_size_bytes,
-    )
-    if bc is not None and broadcast_out is not None:
-        broadcast_out.append(bc)
-    return probed
-
-
-def cuckoo_delete_keys(
-    shards: DataFrame,
-    retracted: DataFrame,
-    key_col: str = "url_key",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Remove retracted keys from their shards (the Bloom-impossible op);
-    returns the updated shard table.
-
-    Same cogrouped shape as ``update_bloom_shards``: deletions arrive as
-    plain rows (never a collect_list array — a 10^8-key retraction wave
-    would otherwise pack one giant array row per bucket) and each table
-    blob crosses the Arrow boundary once per group. Retractions hitting a
-    nonexistent bucket delete nothing (their group has no shard row)."""
-    n_buckets = n_buckets if n_buckets is not None else _shard_n_buckets(shards)
-    hashed = with_hashes(
-        retracted.select(key_col).dropDuplicates([key_col]), key_col, n_buckets
-    ).select("bucket", "_h2")
-
-    def apply_deletes(shard_pdf: pd.DataFrame, dels_pdf: pd.DataFrame):
-        if not len(shard_pdf):  # retraction against a bucket with no shard
-            return pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
-        r = shard_pdf.iloc[0]
-        buf, m, n = r["bits"], int(r["m"]), int(r["n"])
-        if len(dels_pdf):
-            shard = CuckooShard.from_bytes(buf, m)
-            deleted = shard.delete_many(dels_pdf["_h2"].to_numpy())
-            # n tracks occupancy so update_cuckoo_shards' capacity decision
-            # reflects reality after expiry waves (deletes free slots)
-            buf, n = shard.to_bytes(), n - deleted
-        return pd.DataFrame(
-            {
-                "bucket": [int(r["bucket"])],
-                "bits": [buf],
-                "m": [m],
-                "k": [int(r["k"])],
-                "n": [n],
-                "nb": [int(r["nb"])],
-            }
-        )
-
-    return (
-        shards.groupBy("bucket")
-        .cogroup(hashed.groupBy("bucket"))
-        .applyInPandas(apply_deletes, SHARD_SCHEMA)
-    )
-
-
 def filtered_new(
     batch: DataFrame,
     seen: DataFrame | None,
     shards: DataFrame | None,
     key_col: str = "url_key",
     n_buckets: int | None = None,
-    checkpoint: bool = True,
-    broadcast_shards: bool | None = None,
     shard_size_bytes: int | None = None,
 ) -> DataFrame:
     """The scale path: Bloom pre-filter, exact anti-join only on maybe-seen.
 
     Result is provably identical to ``exact_new`` (no false negatives; false
-    positives re-checked exactly). ``broadcast_shards`` passes through to
-    the probe (None = auto-select by shard size — the 10^10-key cogrouped
-    layout is reachable from the pipeline via this default);
-    ``shard_size_bytes`` (the manifest-stashed snapshot size) skips the
-    auto-select's per-construction metadata job.
+    positives re-checked exactly). The probe layout is auto-selected by
+    shard size (the 10^10-key cogrouped layout is reachable from the
+    pipeline this way); ``shard_size_bytes`` (the manifest-stashed snapshot
+    size) skips the auto-select's per-construction metadata job.
 
-    ``checkpoint=True`` (default) localCheckpoints the probed batch before
-    splitting it into the definitely-new / suspect branches: both branches
-    of the union would otherwise re-execute the probe AND its whole
-    upstream lineage (in the crawl round: the fetch-log anti-join, scoring
-    and the first-seen window). The checkpoint also lets the probe's shard
-    broadcast be released immediately (one leaked shard dict per round
-    would otherwise wait on GC→ContextCleaner over a 10^4-round crawl).
-    Pass False only when ``batch`` is already materialized."""
+    The probed batch is localCheckpointed before it is split into the
+    definitely-new / suspect branches: both branches of the union would
+    otherwise re-execute the probe AND its whole upstream lineage (in the
+    crawl round: the fetch-log anti-join, scoring and the first-seen
+    window). The checkpoint also lets the probe's shard broadcast be
+    released immediately (one leaked shard dict per round would otherwise
+    wait on GC→ContextCleaner over a 10^4-round crawl)."""
     if shards is None or seen is None:
         return exact_new(batch, seen, key_col)
     probed, bc = _probe_with_layout(
-        batch, shards, key_col, n_buckets, broadcast_shards,
-        ("bits", "m", "k"), _bloom_kernel, _bloom_size_bytes,
+        batch, shards, key_col, n_buckets, None,
         shard_size_bytes=shard_size_bytes,
     )
-    if checkpoint:
-        probed = probed.localCheckpoint()
-        if bc is not None:
-            bc.unpersist(blocking=False)
+    probed = probed.localCheckpoint()
+    if bc is not None:
+        bc.unpersist(blocking=False)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen", "bucket")
     confirmed_new = exact_new(suspects, seen, key_col)

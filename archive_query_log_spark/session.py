@@ -17,6 +17,21 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """About 40% of the machine's RAM (``MemTotal`` in /proc/meminfo), so a
+    second JVM — a spark-submit leg started beside the test session — still
+    fits. Falls back to 4g where /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, int(kib * 0.4) >> 20)}g"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "archive-query-log-spark",
     master: str | None = None,
@@ -64,7 +79,10 @@ def get_spark(
         )
         # binary image payloads serialize poorly with the default codec
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     # Shuffle/spill scratch space. On shared sandboxes the default /tmp is

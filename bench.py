@@ -181,9 +181,6 @@ def crawl_job(master: str, n_frontier: int, n_images: int, per_fetch: bool,
         )
 
     def _sched_of(allowed, budget):
-        # salted even at an unbounded budget: phase 1 spreads the hot host's
-        # sort across (host,salt) groups — measured ~2× faster than the
-        # single-task host window at local[8].
         # narrow to the fetch-log columns before the Arrow boundary — the
         # frontier's wide struct columns stay out of the fetch stage
         return politeness.schedule(
@@ -191,7 +188,6 @@ def crawl_job(master: str, n_frontier: int, n_images: int, per_fetch: bool,
                 "t0", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
             ),
             budget_waves=budget,
-            salt_partitions=8,
         ).select("id", "image_id", "url_key", "host", "wave", "dispatch_ts")
 
     def job(budget: int | None, pf: bool):

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 
@@ -5,7 +7,11 @@ import pytest
 def spark():
     from archive_query_log_spark.session import get_spark
 
-    s = get_spark(app_name="aql-spark-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(
+        app_name="aql-spark-tests",
+        master=f"local[{len(os.sched_getaffinity(0))}]",
+        shuffle_partitions=8,
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -8,6 +8,10 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from archive_query_log_spark.operators import cascade, merge
+from archive_query_log_spark.operators.rule_tables import (
+    RULES_DF_SCHEMA,
+    local_json_df,
+)
 from archive_query_log_spark.sources import export
 from archive_query_log_spark.tables import SnapshotTable
 
@@ -23,60 +27,54 @@ CASCADE_GOLDEN = [
 ]
 
 
+# our own fixture rule tables (shape-parity with the reference's url_query /
+# url_page tables): (rule_type, argument, provider_id, url_pattern,
+# remove_pattern); list position = rule_order
+FIXTURE_QUERY_RULES = [
+    ("query_param", "q", "alpha", None, None),
+    ("query_param", "query", "beta", None, r"^\*+"),
+    ("path_segment", "2", "gamma", r"/find/", None),
+    ("fragment_param", "q", "gamma", None, None),
+    ("query_param", "search", None, None, None),  # any-provider fallback
+]
+
+FIXTURE_PAGE_RULES = [
+    ("query_param", "page", "alpha", None, None),
+    ("query_param", "p", "beta", None, r"[^0-9]"),
+    ("path_segment", "3", "gamma", r"/find/", None),
+]
+
+
+def _rules_df(spark, rules):
+    return local_json_df(
+        spark,
+        [
+            {
+                "rule_order": i, "rule_type": t, "argument": a,
+                "provider_id": p, "url_pattern": u, "remove_pattern": r,
+                "space_pattern": None,
+            }
+            for i, (t, a, p, u, r) in enumerate(rules)
+        ],
+        RULES_DF_SCHEMA,
+    )
+
+
 def test_cascade_golden(spark):
     df = spark.createDataFrame(
         [(p, u) for p, u, _, _ in CASCADE_GOLDEN], "provider string, url string"
     )
-    out = df.select(
-        "provider",
-        "url",
-        cascade.compile_cascade(
-            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
-        ).alias("query"),
-        cascade.compile_cascade(
-            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"), as_int=True
-        ).alias("page"),
+    out = cascade.apply_cascade_array(
+        df, _rules_df(spark, FIXTURE_QUERY_RULES), F.col("url"),
+        F.col("provider"), out_col="query",
+    )
+    out = cascade.apply_cascade_array(
+        out, _rules_df(spark, FIXTURE_PAGE_RULES), F.col("url"),
+        F.col("provider"), out_col="page", as_int=True,
     ).collect()
     got = {(r["provider"], r["url"]): (r["query"], r["page"]) for r in out}
     for p, u, q, pg in CASCADE_GOLDEN:
         assert got[(p, u)] == (q, pg), (p, u)
-
-
-def test_cascade_join_plan_equals_coalesce_plan(spark):
-    """apply_cascade_join (the 972-rule-scale plan) must produce exactly the
-    coalesce plan's results — incl. percent decoding, fragment params,
-    remove-patterns, the any-provider fallback, and no-match nulls."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, p, u) for i, (p, u, _, _) in enumerate(CASCADE_GOLDEN)],
-        "rid long, provider string, url string",
-    )
-    a = df.select(
-        "rid",
-        cascade.compile_cascade(
-            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
-        ).alias("query"),
-    )
-    rdf = cascade.rules_to_df(spark, cascade.FIXTURE_QUERY_RULES)
-    b = cascade.apply_cascade_join(
-        df, rdf, F.col("url"), F.col("provider"), "rid"
-    ).select("rid", "query")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # int-valued cascade too
-    ai = df.select(
-        "rid",
-        cascade.compile_cascade(
-            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"),
-            as_int=True,
-        ).alias("page"),
-    )
-    rdfp = cascade.rules_to_df(spark, cascade.FIXTURE_PAGE_RULES)
-    bi = cascade.apply_cascade_join(
-        df, rdfp, F.col("url"), F.col("provider"), "rid", out_col="page",
-        as_int=True,
-    ).select("rid", "page")
-    assert sorted(map(tuple, ai.collect())) == sorted(map(tuple, bi.collect()))
 
 
 def test_upsert_create_if_absent(spark):

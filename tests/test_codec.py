@@ -58,15 +58,20 @@ def test_validate_rows_matches_scalar_verdicts():
     must equal the scalar validate_row path across formats, image sizes
     (incl. non-multiple-of-8), and every fallback edge — dead link, bad
     magic, truncated zlib, stored-shape mismatch, wrong caption/phash,
-    corrupted pixels."""
+    corrupted pixels. The 128×128 rows leave a batched group of 304 rows,
+    which spans three chunks at the adaptive chunk size (128 rows); sides
+    under 8 px (too small for the phash grid) must get the scalar 422
+    verdict, not raise."""
     rows = []
-    for i in range(600):
+    sizes = [(16, 16), (32, 32), (40, 40), (20, 20)]  # 20: not a multiple of 8
+    tiny = [(4, 4), (16, 4), (4, 16)]  # first: clean rows (kinds 0-2)
+    shapes = tiny + [sizes[i % 4] for i in range(600)] + [(128, 128)] * 400
+    for i, (w, h) in enumerate(shapes):
         iid = f"img-par-{i % 60:05d}"
         fmt = "jpeg" if i % 2 else "png"
-        w = h = [16, 32, 40, 20][i % 4]  # 20: not a multiple of 8
         px = codec.synth_pixels(iid, w, h)
         buf = codec.encode(px, fmt)
-        ph = codec.phash(codec.decode(buf)[3])
+        ph = codec.phash(codec.decode(buf)[3]) if min(w, h) >= 8 else 0
         cap = codec.synth_caption(iid)
         kind = i % 17
         if kind == 13:
@@ -108,3 +113,4 @@ def test_validate_rows_matches_scalar_verdicts():
             bool(phash_ok[j]),
         )
         assert got == exp, (j, iid, fmt, got, exp)
+    assert list(status[: len(tiny)]) == [422] * len(tiny)

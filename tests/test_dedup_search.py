@@ -51,7 +51,10 @@ def test_jaccard_pairs(spark):
 
 
 def test_simhash_near_for_near_docs(spark):
-    rows = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(_docs(spark)).collect()}
+    rows = {
+        r["doc_id"]: r["simhash32"]
+        for r in dedup.simhash32_md5(_docs(spark)).collect()
+    }
     assert rows[0] == rows[3]
     d_near = bin(rows[0] ^ rows[1]).count("1")
     d_far = bin(rows[0] ^ rows[2]).count("1")
@@ -292,7 +295,7 @@ def test_cosine_near_dup_hot_bucket_cap(spark):
 
 
 def test_connected_components_chains_and_isolates(spark):
-    """Min-label propagation converges past diameter-3 chains and keeps
+    """Connected components converge past diameter-3 chains and keep
     components separate; deterministic labels = min id per component."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (21, 20), (21, 22)],
@@ -346,15 +349,15 @@ def test_udf_paths_survive_null_and_ragged_embeddings(spark):
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
+    """One star round cannot contract an 8-edge chain to its fixpoint: the
+    distributed plan must raise rather than return a split component."""
     import pytest as _pytest
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a long, id_b long"
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(
-            chain, max_iter=2, method="minlabel", local_threshold=0
-        )
+        dedup.connected_components(chain, max_iter=1, local_threshold=0)
 
 
 def test_connected_components_star_long_chain(spark):
@@ -373,9 +376,10 @@ def test_connected_components_star_long_chain(spark):
     assert all(r["cluster_id"] == 0 for r in rows)
 
 
-def test_connected_components_star_equals_minlabel(spark):
-    """star and minlabel are interchangeable bit-for-bit on chains, rings,
-    stars, cliques and a seeded random graph."""
+def test_connected_components_star_equals_union_find(spark):
+    """The distributed star plan and the driver union-find agree
+    bit-for-bit on chains, rings, stars, cliques and a seeded random
+    graph."""
     import random
 
     random.seed(5)
@@ -391,15 +395,12 @@ def test_connected_components_star_equals_minlabel(spark):
     }
     for name, edges in graphs.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {r["node"]: r["cluster_id"]
-             for r in dedup.connected_components(
-                 pairs, method="star", local_threshold=0).collect()}
-        b = {r["node"]: r["cluster_id"]
-             for r in dedup.connected_components(
-                 pairs, method="minlabel", local_threshold=0).collect()}
-        c = {r["node"]: r["cluster_id"]
-             for r in dedup.connected_components(pairs).collect()}  # local
-        assert a == b == c, (name, a, b, c)
+        star = {r["node"]: r["cluster_id"]
+                for r in dedup.connected_components(
+                    pairs, local_threshold=0).collect()}
+        local = {r["node"]: r["cluster_id"]
+                 for r in dedup.connected_components(pairs).collect()}
+        assert star == local, (name, star, local)
 
 
 def test_blocks_survive_null_url(spark):

@@ -24,7 +24,7 @@ def test_crawl_converges_and_validates(spark, fixtures):
     root = tempfile.mkdtemp(prefix="t_crawl_")
     try:
         state = pipeline.init_state(root, frontier)
-        cfg = pipeline.CrawlConfig(budget_waves=32, salt_partitions=4)
+        cfg = pipeline.CrawlConfig(budget_waves=32)
         stats = pipeline.run(spark, state, images, robots, cfg, max_rounds=6)
         assert stats and stats[0]["fetched"] > 0
         fetches = state.fetches.read(spark)
@@ -74,6 +74,36 @@ def test_refetch_window_repolls(spark, fixtures):
         assert seen.count() == fetches.where(~F.col("is_refresh")).count()
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_per_fetch_path_equals_content_addressed_path(spark, fixtures):
+    """fetch_and_validate(per_fetch=True) — decode at every fetch row —
+    gives the same rows as the default path that validates each distinct
+    payload once and joins the verdicts back, dead links included."""
+    from archive_query_log_spark.crawler.fetch import fetch_and_validate
+
+    images, frontier, _ = fixtures
+    cols = ["id", "image_id", "url_key", "host"]
+    dead = spark.createDataFrame(
+        [("dead-0", "img-missing", "dead-key", "h01.example.com")],
+        "id string, image_id string, url_key string, host string",
+    )
+    sched = frontier.select(*cols).unionByName(dead)
+    out_cols = cols + [
+        "fetch_status", "psnr_db", "psnr_ok", "caption_ok", "phash_ok"
+    ]
+
+    def rows(per_fetch):
+        out = fetch_and_validate(sched, images, per_fetch=per_fetch)
+        return sorted(map(tuple, out.select(*out_cols).collect()))
+
+    cached, per_row = rows(False), rows(True)
+    assert len(cached) == frontier.count() + 1
+    assert cached == per_row
+    assert [r for r in cached if r[0] == "dead-0"] == [
+        ("dead-0", "img-missing", "dead-key", "h01.example.com",
+         404, 0.0, False, False, False)
+    ]
 
 
 def test_crawl_progress_rollup(spark, fixtures):

@@ -1,5 +1,5 @@
-"""Politeness scheduler: budget, robots rules, crawl delays, and the
-salted-ranking equivalence proof."""
+"""Politeness scheduler: budget, robots rules, crawl delays, and
+partitioning invariance of the per-host ranking."""
 
 from pyspark.sql import functions as F
 
@@ -8,7 +8,7 @@ from archive_query_log_spark.functions.ids import worklist_score
 from archive_query_log_spark.operators import politeness, seen_set
 
 
-def _scheduled(spark, salt_partitions=1, budget=8):
+def _scheduled(spark, budget=8, partitions=None):
     frontier = synth.synth_frontier(spark, 2000, 300, 8)
     cand = frontier.withColumn(
         "score",
@@ -18,10 +18,11 @@ def _scheduled(spark, salt_partitions=1, budget=8):
     )
     cand = seen_set.first_seen_in_batch(cand)
     allowed = politeness.apply_robots(cand, synth.synth_robots(spark), "url", "host")
+    if partitions is not None:
+        allowed = allowed.repartition(partitions)
     return politeness.schedule(
         allowed.withColumn("t0", F.to_timestamp(F.lit("2024-01-01 00:00:00"))),
         budget_waves=budget,
-        salt_partitions=salt_partitions,
     )
 
 
@@ -82,15 +83,6 @@ def test_crawl_delay_applied(spark):
         assert r["dispatch_ts"].second == 2
 
 
-def test_salted_schedule_identical_to_unsalted(spark):
-    plain = _scheduled(spark, salt_partitions=1)
-    salted = _scheduled(spark, salt_partitions=8)
-    key = lambda r: (r["host"], r["wave"], r["url_key"])  # noqa: E731
-    a = sorted(map(key, plain.select("host", "wave", "url_key").collect()))
-    b = sorted(map(key, salted.select("host", "wave", "url_key").collect()))
-    assert a == b
-
-
 def test_host_without_rules_gets_defaults(spark):
     """A host absent from the robots table is allowed with the reference's
     default 10 s delay (config.py:157-164 parity)."""
@@ -133,8 +125,10 @@ def test_schedule_equals_rate_limiter_simulation(spark):
 
 
 def test_schedule_partitioning_invariant(spark):
-    base = _scheduled(spark)
-    cols = ["host", "wave", "url_key"]
-    a = sorted(map(tuple, base.select(*cols).collect()))
-    b = sorted(map(tuple, base.repartition(17).select(*cols).collect()))
-    assert a == b
+    """The ranking's inputs arrive in a different partitioning (1 and 17
+    partitions) and the schedule is unchanged row for row."""
+    cols = ["host", "wave", "url_key", "dispatch_ts"]
+    base = sorted(map(tuple, _scheduled(spark).select(*cols).collect()))
+    for parts in (1, 17):
+        got = _scheduled(spark, partitions=parts).select(*cols).collect()
+        assert sorted(map(tuple, got)) == base, parts

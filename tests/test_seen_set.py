@@ -148,7 +148,7 @@ def test_shard_total_bytes_and_size_hint_layouts(spark):
     )
     cfg = seen_set.BloomConfig(n_buckets=4)
     shards = seen_set.build_bloom_shards(keys, "url_key", cfg).cache()
-    total = seen_set.shard_total_bytes(shards, "bloom")
+    total = seen_set.shard_total_bytes(shards)
     # blobs are m/8 bytes each; cross-check against collected rows
     rows = shards.select("m").collect()
     assert total == sum(int(r["m"]) // 8 for r in rows) and total > 0
@@ -197,6 +197,6 @@ def test_pipeline_commit_stashes_shard_bytes(spark, tmp_path):
     for m in hist:
         stashed = m["meta"]["shard_total_bytes"]
         fresh = seen_set.shard_total_bytes(
-            state.seen_shards.read(spark, m["version"]), "bloom"
+            state.seen_shards.read(spark, m["version"])
         )
         assert stashed == fresh > 0

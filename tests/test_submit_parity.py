@@ -58,7 +58,8 @@ def test_spark_submit_zip_reproduces_in_process_digest(spark, tmp_path):
     }
     out = subprocess.run(
         [
-            "spark-submit", "--master", "local[8]",
+            "spark-submit",
+            "--master", f"local[{len(os.sched_getaffinity(0))}]",
             "--py-files", str(stage / "aql_spark.zip"),
             str(stage / "submit_crawl.py"),
             "--workdir", str(tmp_path / "submitted"),

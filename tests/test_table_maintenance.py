@@ -151,7 +151,7 @@ def test_maintain_between_rounds_preserves_crawl_equivalence(spark, tmp_path):
     images = synth.synth_images(spark, 100, 4).cache()
     frontier = synth.synth_frontier(spark, 400, 100, 4).cache()
     robots = synth.synth_robots(spark)
-    cfg = pipeline.CrawlConfig(budget_waves=16, salt_partitions=4)
+    cfg = pipeline.CrawlConfig(budget_waves=16)
 
     def fetch_sig(state):
         r = (

@@ -121,7 +121,7 @@ def main():
                 print("      " + p)
             n_fail += 1
         else:
-            print(f"PASS  {name}: {len(srows)} rows")
+            print(f"PASS  {name}: {len(srows)} rows {hs[:12]}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     spark.stop()

@@ -23,7 +23,7 @@ path — stale re-polls bypassing the seen set — is exercised and frozen:
   robots               longest-prefix rule pick incl. the tie comparator
                        (disallow first, then larger delay)
   politeness waves     per-host sort by (score desc, url_key asc), budget
-                       cut at 8 waves (the salted plan is proven equal)
+                       cut at 8 waves (the score-bucket plan is proven equal)
   fetch + validate     codec.validate_row over the twin-built payloads
   metrics              per-(round, xxhash64(host) mod 32 bucket) rollup —
                        the XXH64 here is an independent pure-Python

@@ -42,7 +42,6 @@ def build_artifacts(spark):
     sched = politeness.schedule(
         allowed.withColumn("t0", F.to_timestamp(F.lit("2024-01-01 00:00:00"))),
         budget_waves=BUDGET,
-        salt_partitions=4,
     )
     order_lines = [
         f"{r['wave']}\t{r['host']}\t{r['url_key']}\t{r['dispatch_ts']:%Y-%m-%d %H:%M:%S}"
