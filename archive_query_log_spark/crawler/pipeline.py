@@ -145,23 +145,15 @@ def _version_before_round(table: SnapshotTable, round_id: int) -> int | None:
 
 def _commit_once(
     table: SnapshotTable, df: DataFrame, op: str, round_id: int,
-    post_write_meta=None,
-) -> bool:
-    """Commit unless this round already committed to this table (replay)."""
+    observe: dict | None = None,
+) -> dict:
+    """Commit unless this round already committed to this table (replay).
+    Returns the meta of the table's snapshot for this round either way, so
+    statistics observed on the first commit survive a replay."""
     v = table.latest_version()
-    if v is not None and table._manifest(v)["meta"].get("round") == round_id:
-        return False
-    table.commit(df, op=op, meta={"round": round_id},
-                 post_write_meta=post_write_meta)
-    return True
-
-
-def _shard_bytes_meta(written: DataFrame) -> dict:
-    """Manifest stash for seen_shards commits: the snapshot's summed
-    Bloom-blob bytes. Static per snapshot — computing it here (one
-    n_buckets-row agg over the just-written files, once per round's commit)
-    lets every later probe construction skip its own layout-decision job."""
-    return {"shard_total_bytes": seen_set.shard_total_bytes(written)}
+    if v is None or table._manifest(v)["meta"].get("round") != round_id:
+        v = table.commit(df, op=op, meta={"round": round_id}, observe=observe)
+    return table._manifest(v)["meta"]
 
 
 def next_round_id(state: CrawlState) -> int:
@@ -210,8 +202,8 @@ def run_round(
     shards = (
         state.seen_shards.read(spark, shard_ver) if shard_ver is not None else None
     )
-    # manifest-stashed snapshot size (committed by _shard_bytes_meta) —
-    # probes of older snapshots (pre-stash manifests) fall back to the agg
+    # snapshot size observed on the shards commit (absent after a
+    # compaction: the probe then runs its own agg)
     shard_bytes = (
         state.seen_shards._manifest(shard_ver)["meta"].get("shard_total_bytes")
         if shards is not None
@@ -235,6 +227,10 @@ def run_round(
     ).drop("t0")
 
     # fetch + validate; cache: used for fetches commit, seen update, metrics.
+    # The cached plan ends in the politeness rank's shuffle; AQE coalesces
+    # it to the data's size (session.get_spark allows it for cached plans),
+    # so each consumer runs a few tasks and the fetches commit writes a few
+    # files, not one per shuffle partition.
     # `round` rides every fetch row as per-row lineage (which round produced
     # this fetch) — the commit meta carries it too, but a row-level tag
     # survives compaction/export and lets the digest oracle pin the full
@@ -249,7 +245,18 @@ def run_round(
     )
     results.cache()
 
-    _commit_once(state.fetches, results, "append", round_id)
+    # the round's totals are observed on the fetches write (no job of
+    # their own) and read back from its manifest — on a replay too
+    totals = _commit_once(
+        state.fetches, results, "append", round_id,
+        observe={
+            "fetched": F.count(F.lit(1)),
+            "ok": F.coalesce(
+                F.sum(F.when(F.col("fetch_status") == 200, 1).otherwise(0)),
+                F.lit(0),
+            ),
+        },
+    )
 
     # seen-set update: exact keys append + bloom shard rebuild (refreshes
     # are already members — only first-time fetches extend the set)
@@ -270,7 +277,7 @@ def run_round(
             shards, new_keys, all_keys, "url_key", bloom_cfg
         )
     _commit_once(state.seen_shards, next_shards, "overwrite", round_id,
-                 post_write_meta=_shard_bytes_meta)
+                 observe={"shard_total_bytes": seen_set.shard_bytes()})
 
     # NOTE: no frontier write — the reference flips should_fetch/last_fetched
     # in place (an ES doc update); at 10^10 rows the columnar equivalent is a
@@ -296,11 +303,6 @@ def run_round(
         .withColumn("round", F.lit(round_id))
     )
     _commit_once(state.metrics, per_bucket, "append", round_id)
-
-    totals = results.agg(
-        F.count("*").alias("fetched"),
-        F.sum(F.when(F.col("fetch_status") == 200, 1).otherwise(0)).alias("ok"),
-    ).collect()[0]
     results.unpersist()
     return {"round": round_id, "fetched": totals["fetched"], "ok": totals["ok"]}
 
@@ -360,7 +362,8 @@ def maintain(
         m = t._manifest(t.latest_version())
         if compact_over_dirs and len(m["data_dirs"]) >= compact_over_dirs:
             r["compacted_to_version"] = t.compact(
-                spark, carry_meta_keys=("round", "stage")
+                spark,
+                carry_meta_keys=("round", "stage", "fetched", "ok"),
             )
         r["expire"] = t.expire_snapshots(keep_last=keep_last)
         r["orphans_removed"] = t.remove_orphans(older_than_s=orphan_age_s)

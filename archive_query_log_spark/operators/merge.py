@@ -58,7 +58,7 @@ def _read_buckets(
     dirs = [d for b in affected for d in bucket_dirs.get(b, [])]
     if not dirs:
         return table.read(spark).limit(0)
-    return spark.read.parquet(*dirs)
+    return spark.read.schema(table.schema()).parquet(*dirs)
 
 
 def upsert_create_if_absent(

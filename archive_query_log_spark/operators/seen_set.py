@@ -28,7 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -165,16 +165,21 @@ def build_bloom_shards(
 _BROADCAST_SHARDS_MAX_BYTES = 256 << 20
 
 
-def shard_total_bytes(shards: DataFrame) -> int:
-    """Summed filter-blob bytes of a shard table (an n_buckets-row agg).
+def shard_bytes() -> Column:
+    """Aggregate Column: summed filter-blob bytes of a shard table (a
+    bitmap of m bits is stored in m/8 bytes; 0 for no shards).
 
-    The number is STATIC per shard snapshot — compute it once when the
-    snapshot is committed (stash it in the snapshot manifest's meta, as the
-    crawl pipeline does) and pass it to the probes as ``shard_size_bytes``
-    so layout auto-selection stops costing one Spark job per probe
-    construction."""
-    total = shards.agg(F.sum(_bloom_size_bytes()).alias("b")).first()["b"]
-    return int(total) if total is not None else 0
+    The number is STATIC per shard snapshot — observe it on the snapshot's
+    commit (``SnapshotTable.commit(observe={"shard_total_bytes":
+    shard_bytes()})``, as the crawl pipeline does, costs no Spark job) and
+    pass it to the probes as ``shard_size_bytes`` so layout auto-selection
+    stops costing one Spark job per probe construction."""
+    return F.coalesce(F.sum(F.shiftright(F.col("m"), 3)), F.lit(0))
+
+
+def shard_total_bytes(shards: DataFrame) -> int:
+    """``shard_bytes()`` of a shard table, by an n_buckets-row agg job."""
+    return int(shards.agg(shard_bytes()).first()[0])
 
 
 def _probe_with_layout(
@@ -286,11 +291,6 @@ def _bloom_kernel(
     return ((arr[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=1)
 
 
-def _bloom_size_bytes():
-    # bloom bitmap is m bits -> m/8 stored bytes
-    return F.col("m") / F.lit(8)
-
-
 def bloom_probe(
     batch: DataFrame,
     shards: DataFrame,
@@ -335,14 +335,13 @@ def update_bloom_shards(
 
     Guarantee preserved: zero false negatives (OR only adds bits; rebuilds
     re-insert every key of the bucket).
+
+    Raises ``ValueError`` for shards built with another ``n_buckets`` than
+    ``cfg``'s: the keys would land in the wrong buckets, and rebucketing
+    needs a full rebuild. The rebuild-decision collect below brings the
+    mismatched shards' recorded ``nb`` back, so the check costs no job.
     """
     cfg = cfg or BloomConfig()
-    nb = _shard_n_buckets(shards)
-    if nb != cfg.n_buckets:
-        raise ValueError(
-            f"shards were built with n_buckets={nb}, update requested "
-            f"{cfg.n_buckets} — rebucketing requires a full rebuild"
-        )
     hashed = with_hashes(
         new_keys.select(key_col).dropDuplicates([key_col]), key_col, cfg.n_buckets
     )
@@ -354,22 +353,31 @@ def update_bloom_shards(
     # double-executed the blob-producing map to read its rebuild flags).
     counts = hashed.groupBy("bucket").agg(F.count("*").alias("n_add"))
     meta = (
-        shards.select("bucket", "m", "n")
+        shards.select("bucket", "m", "n", "nb")
         .join(counts, on="bucket", how="full_outer")
     )
-    rebuild = [
-        int(r["bucket"])
-        for r in meta.where(
+    decided = (
+        meta.where(
             F.col("m").isNull()  # brand-new bucket
             | (
                 (F.col("n") + F.coalesce(F.col("n_add"), F.lit(0)))
                 * cfg.bits_per_key
                 > F.col("m")
             )
+            | (F.col("nb") != cfg.n_buckets)
         )
-        .select("bucket")
+        .select("bucket", "nb")
         .collect()
-    ]
+    )
+    wrong_nb = {int(r["nb"]) for r in decided if r["nb"] is not None} - {
+        cfg.n_buckets
+    }
+    if wrong_nb:
+        raise ValueError(
+            f"shards were built with n_buckets={min(wrong_nb)}, update "
+            f"requested {cfg.n_buckets} — rebucketing requires a full rebuild"
+        )
+    rebuild = [int(r["bucket"]) for r in decided]
     kept_shards = shards
     kept_adds = hashed.select("bucket", "_h1", "_h2")
     if rebuild:

@@ -61,6 +61,19 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
         )
+        # A cached plan otherwise keeps its final shuffle's full
+        # spark.sql.shuffle.partitions: AQE may not coalesce it, so every
+        # consumer of the cache (the crawl round's results feed four
+        # commits) runs one task per partition and a write emits one tiny
+        # file per partition. Measured on the benchmark's crawl rounds:
+        # those consumers went from 32 tasks to a few, the fetches commit
+        # from 32 files to a few, and no round gained a stage. Not
+        # measured at larger sizes, where Spark warns that a consumer
+        # relying on the cached plan's partitioning may need an extra
+        # shuffle.
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 8192-row Arrow batches (was 2048): the per-fetch decode path

@@ -12,8 +12,19 @@ Guarantees used by the crawler (SURVEY.md §2.11):
   ``_snapshots/`` — a killed run leaves at most orphan data files, never a
   torn table;
 - readers always see the latest *committed* snapshot → deterministic resume;
-- every manifest records op + row_count + lineage metadata (wave id,
-  parent snapshot), giving the per-wave lineage the north_rule asks for.
+- every manifest records op + lineage metadata (wave id, parent
+  snapshot), giving the per-wave lineage the north_rule asks for;
+  ``commit`` (and so ``compact`` of a plain table) also records the
+  snapshot's ``row_count``, observed on its write, and ``rollback`` copies
+  its target's; bucketed commits record none, because they carry
+  untouched buckets forward unread;
+- every manifest pins the table schema, so a read lists files but starts
+  no schema-inference job (file sources read every field as nullable, so
+  the pinned read's schema equals the inferred one);
+- statistics a writer wants beside its data (the crawl round's fetch
+  totals, the seen-set shard bytes) are observed on the data write itself
+  (``pyspark.sql.Observation``, ``commit(observe=)``) and kept in the
+  manifest's meta — no job re-reads a snapshot to describe it.
 """
 
 from __future__ import annotations
@@ -25,8 +36,9 @@ import uuid
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BUCKET_COL = "_bucket"
 
@@ -71,13 +83,21 @@ class SnapshotTable:
     def exists(self) -> bool:
         return self.latest_version() is not None
 
+    def _publish(self, manifest: dict[str, Any]) -> int:
+        """Atomically make ``manifest`` the table's next snapshot."""
+        version = manifest["version"]
+        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
+        tmp.write_text(json.dumps(manifest, indent=1))
+        os.replace(tmp, self.snap_dir / f"v{version}.json")
+        return version
+
     def commit(
         self,
         df: DataFrame,
         op: str = "append",
         meta: dict[str, Any] | None = None,
         dry_run: bool = False,
-        post_write_meta: Any = None,
+        observe: dict[str, Column] | None = None,
     ) -> int:
         """Write df as new data files and atomically publish a new snapshot.
 
@@ -85,13 +105,13 @@ class SnapshotTable:
         count what would be committed, but write nothing — the table is
         untouched; returns the version that WOULD have been committed.
 
-        ``post_write_meta``: optional callable ``(written: DataFrame) ->
-        dict`` invoked AFTER the data write with a DataFrame re-read from
-        the just-written files (so the input plan is never executed twice);
-        its result is merged into the manifest's meta before the atomic
-        rename. Use it to stash snapshot-static statistics (e.g. the
-        seen-set shard table's summed blob bytes) that readers would
-        otherwise recompute with a Spark job per use."""
+        ``observe``: named aggregate Columns (e.g. ``{"ok": F.sum(...)}``)
+        evaluated on the data write itself by one ``Observation`` — no
+        extra Spark job, and the input plan runs once — and merged into the
+        manifest's meta. They aggregate the rows THIS commit writes (an
+        append's delta, not the whole snapshot). The manifest's
+        ``row_count`` (the whole snapshot's) is observed the same way; an
+        append to a bucketed snapshot, which records none, records none."""
         assert op in ("append", "overwrite")
         parent = self.latest_version()
         version = (parent + 1) if parent is not None else 0
@@ -104,32 +124,35 @@ class SnapshotTable:
             return version
         self.snap_dir.mkdir(parents=True, exist_ok=True)
         file_dir = self.data_dir / f"v{version}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("errorifexists").parquet(str(file_dir))
+        obs = Observation()
+        aggs = {"_rows": F.count(F.lit(1)), **(observe or {})}
+        df.observe(obs, *[c.alias(k) for k, c in aggs.items()]).write.mode(
+            "errorifexists"
+        ).parquet(str(file_dir))
+        observed = obs.get
+        rows = observed.pop("_rows")
         dirs = [str(file_dir)]
+        schema = df.schema.jsonValue()
         if op == "append" and parent is not None:
-            dirs = self._manifest(parent)["data_dirs"] + dirs
-        meta = dict(meta or {})
-        if post_write_meta is not None:
-            # snapshot-static stats must describe the WHOLE snapshot; on an
-            # append commit this closure would see only the delta files and
-            # stash e.g. a shard_total_bytes far below reality — a reader
-            # trusting it could broadcast a shard set past the 256 MB
-            # cutover. Read every data dir of the new snapshot instead.
-            meta.update(
-                post_write_meta(df.sparkSession.read.parquet(*dirs))
-            )
+            # an append conforms to the table's schema (columns resolve by
+            # name, so a delta written in another column order reads the
+            # same); the schema stays the one the table was created with
+            pm = self._manifest(parent)
+            dirs = pm["data_dirs"] + dirs
+            rows = rows + pm["row_count"] if "row_count" in pm else None
+            schema = pm["schema"]
         manifest = {
             "version": version,
             "parent": parent,
             "op": op,
             "data_dirs": dirs,
+            "schema": schema,
             "committed_at": time.time(),
-            "meta": meta,
+            "meta": {**(meta or {}), **observed},
         }
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        if rows is not None:
+            manifest["row_count"] = rows
+        return self._publish(manifest)
 
     # -- bucketed commits (partition-pruned MERGE support) -------------------
 
@@ -159,6 +182,7 @@ class SnapshotTable:
             raise ValueError(f"bucket_mode must be replace|append, got {bucket_mode!r}")
         self.snap_dir.mkdir(parents=True, exist_ok=True)
         parent = self.latest_version()
+        schema = df.schema.jsonValue()
         if parent is not None:
             pm = self._manifest(parent)
             if pm.get("bucket_key") not in (None, key):
@@ -169,6 +193,9 @@ class SnapshotTable:
                 raise ValueError(
                     f"bucket count changed: {pm.get('n_buckets')} -> {n_buckets}"
                 )
+            if reuse_buckets:
+                # carried buckets keep the table's schema (see commit)
+                schema = pm["schema"]
         version = (parent + 1) if parent is not None else 0
         file_dir = self.data_dir / f"v{version}-{uuid.uuid4().hex[:8]}"
         out = df.withColumn(BUCKET_COL, bucket_of(key, n_buckets))
@@ -184,21 +211,18 @@ class SnapshotTable:
                 buckets[b] = buckets.get(b, []) + [str(p)]
             else:
                 buckets[b] = [str(p)]
-        manifest = {
+        return self._publish({
             "version": version,
             "parent": parent,
             "op": "overwrite",
             "data_dirs": [d for dirs in buckets.values() for d in dirs],
+            "schema": schema,
             "bucket_key": key,
             "n_buckets": n_buckets,
             "buckets": buckets,
             "committed_at": time.time(),
             "meta": meta or {},
-        }
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        })
 
     def bucket_info(
         self, version: int | None = None
@@ -219,12 +243,23 @@ class SnapshotTable:
 
     # -- read ---------------------------------------------------------------
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def _snapshot(self, version: int | None) -> dict[str, Any]:
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        dirs = self._manifest(v)["data_dirs"]
-        return spark.read.parquet(*dirs)
+        return self._manifest(v)
+
+    def schema(self, version: int | None = None) -> StructType:
+        """The schema pinned in the snapshot's manifest."""
+        return StructType.fromJson(self._snapshot(version)["schema"])
+
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+        """The snapshot's rows, read with its pinned schema: listing the
+        data files is the only work done before an action."""
+        m = self._snapshot(version)
+        return spark.read.schema(StructType.fromJson(m["schema"])).parquet(
+            *m["data_dirs"]
+        )
 
     def history(self) -> list[dict[str, Any]]:
         return [self._manifest(v) for v in self._versions()]
@@ -359,16 +394,14 @@ class SnapshotTable:
             "parent": parent,
             "op": "rollback",
             "data_dirs": m["data_dirs"],
+            "schema": m["schema"],
             "committed_at": time.time(),
             "meta": meta,
         }
-        for k in ("bucket_key", "n_buckets", "buckets"):
+        for k in ("row_count", "bucket_key", "n_buckets", "buckets"):
             if k in m:
                 manifest[k] = m[k]
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        return self._publish(manifest)
 
     def compact(
         self,
@@ -384,11 +417,9 @@ class SnapshotTable:
         per bucket, merge ops unaffected. Row content is byte-identical;
         only the physical layout changes. Chain with ``expire_snapshots``
         to reclaim the superseded files."""
-        v = self.latest_version()
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(v)
-        df = self.read(spark)
+        m = self._snapshot(None)
+        v = m["version"]
+        df = self.read(spark, v)
         n_files_before = len(m["data_dirs"])
         meta = {"compacted_from": v, "dirs_before": n_files_before}
         # carry chosen lineage keys through (e.g. the crawl pipeline's

@@ -128,16 +128,20 @@ def test_crash_resume_exactly_once(spark, fixtures):
     rootB = tempfile.mkdtemp(prefix="t_crashB_")
     try:
         stateA = pipeline.init_state(rootA, frontier)
-        pipeline.run_round(spark, stateA, images, robots, cfg, 0)
+        first = pipeline.run_round(spark, stateA, images, robots, cfg, 0)
         # simulate a kill after the fetches commit but before the seen-set
         # (and metrics) commits — the dangerous half-committed window
         os.remove(sorted(stateA.seen_keys.snap_dir.glob("v*.json"))[-1])
         os.remove(sorted(stateA.seen_shards.snap_dir.glob("v*.json"))[-1])
         os.remove(sorted(stateA.metrics.snap_dir.glob("v*.json"))[-1])
-        pipeline.run_round(spark, stateA, images, robots, cfg, 0)
+        # the fetches commit survived, so the replay skips it and reports
+        # the totals observed on it from its manifest
+        replayed = pipeline.run_round(spark, stateA, images, robots, cfg, 0)
 
         stateB = pipeline.init_state(rootB, frontier)
-        pipeline.run_round(spark, stateB, images, robots, cfg, 0)
+        clean = pipeline.run_round(spark, stateB, images, robots, cfg, 0)
+        assert first == replayed == clean
+        assert clean["fetched"] > 0
 
         a = sorted(r["url_key"] for r in stateA.seen_keys.read(spark).collect())
         b = sorted(r["url_key"] for r in stateB.seen_keys.read(spark).collect())

@@ -1,6 +1,7 @@
 """Seen-set invariants: bloom-filtered novelty must equal the exact
 anti-join (zero false negatives; false positives resolved exactly)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from archive_query_log_spark.crawler import synth
@@ -200,3 +201,22 @@ def test_pipeline_commit_stashes_shard_bytes(spark, tmp_path):
             state.seen_shards.read(spark, m["version"])
         )
         assert stashed == fresh > 0
+
+
+def test_update_rejects_shards_of_another_bucket_count(spark):
+    """Shards built with n_buckets=8 cannot take an update under a config
+    of 4: the new keys would hash into the wrong buckets (false
+    negatives). The check rides the rebuild-decision collect, so it raises
+    before the update's plan is returned."""
+    keys = spark.createDataFrame(
+        [(f"k{i}",) for i in range(300)], "url_key string"
+    )
+    shards = seen_set.build_bloom_shards(
+        keys, "url_key", seen_set.BloomConfig(n_buckets=8)
+    )
+    new = spark.createDataFrame([("n1",), ("n2",)], "url_key string")
+    with pytest.raises(ValueError, match="rebucketing"):
+        seen_set.update_bloom_shards(
+            shards, new, keys.unionByName(new), "url_key",
+            seen_set.BloomConfig(n_buckets=4),
+        )

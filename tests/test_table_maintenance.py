@@ -232,3 +232,30 @@ def test_orphan_gc_survives_path_respelling(spark, tmp_path, monkeypatch):
     assert t.remove_orphans(older_than_s=0) == []
     t.expire_snapshots(keep_last=1)
     assert _rows(spark, t) == [(1, "a"), (2, "b")]
+
+
+def test_manifest_row_count_matches_snapshot(spark, tmp_path):
+    """A plain table's row_count (observed on the write, summed over
+    appends, copied by rollback) equals the snapshot's row count."""
+
+    def check(t):
+        v = t.latest_version()
+        assert t._manifest(v)["row_count"] == t.read(spark, v).count()
+
+    t = SnapshotTable(tmp_path / "plain")
+    df = lambda lo, hi: spark.createDataFrame(
+        [(i, f"v{i}") for i in range(lo, hi)], "k int, v string"
+    )
+    t.commit(df(0, 5), op="append")
+    check(t)
+    t.commit(df(5, 12), op="append")
+    check(t)
+    t.commit(df(0, 3), op="overwrite")
+    check(t)
+    t.commit(df(3, 9), op="append")
+    check(t)
+    t.compact(spark, target_partitions=2)
+    check(t)
+    t.rollback(1)
+    check(t)
+    assert t._manifest(t.latest_version())["row_count"] == 12
