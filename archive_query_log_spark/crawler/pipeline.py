@@ -9,7 +9,7 @@ SURVEY.md §2.11 — worklist flags, not a stream processor):
         ──▶ fetch+validate (one Arrow pass per distinct payload,
             verdicts joined back onto the scheduled fetches)
         ──▶ commits (append-only): fetches++, seen_keys++,
-                     seen_shards (Bloom bits OR-updated), metrics++
+                     seen_shards (new keys' Bloom bits OR-ed in), metrics++
 
 The frontier is never rewritten: worklist state (fetched? when?) derives
 from the appended fetch log — the reference's in-place ES flag updates
@@ -177,6 +177,17 @@ def run_round(
     cfg = cfg or CrawlConfig()
     seen_ver = _version_before_round(state.seen_keys, round_id)
     shard_ver = _version_before_round(state.seen_shards, round_id)
+    shard_meta = (
+        state.seen_shards._manifest(shard_ver)["meta"] if shard_ver is not None else {}
+    )
+    # shards under another modulus would give false negatives: refuse before
+    # the probe runs and before any table commits
+    built_nb = shard_meta.get("n_buckets")
+    if built_nb is not None and built_nb != cfg.n_buckets:
+        raise ValueError(
+            f"shards were built with n_buckets={built_nb}, round {round_id} "
+            f"requested {cfg.n_buckets} — rebucketing requires a full rebuild"
+        )
     frontier = state.frontier.read(spark)
 
     def score(df: DataFrame) -> DataFrame:
@@ -202,16 +213,9 @@ def run_round(
     shards = (
         state.seen_shards.read(spark, shard_ver) if shard_ver is not None else None
     )
-    # snapshot size observed on the shards commit (absent after a
-    # compaction: the probe then runs its own agg)
-    shard_bytes = (
-        state.seen_shards._manifest(shard_ver)["meta"].get("shard_total_bytes")
-        if shards is not None
-        else None
-    )
     fresh = seen_set.filtered_new(
         new, seen, shards, "url_key", cfg.n_buckets,
-        shard_size_bytes=shard_bytes,
+        shard_size_bytes=shard_meta.get("shard_total_bytes"),
     ).withColumn("is_refresh", F.lit(False))
     if refresh is not None:
         fresh = fresh.unionByName(
@@ -258,31 +262,28 @@ def run_round(
         },
     )
 
-    # seen-set update: exact keys append + bloom shard rebuild (refreshes
-    # are already members — only first-time fetches extend the set)
+    # seen-set update: exact keys append + new keys OR-ed into the Bloom
+    # shards, sized once for the frontier (no seen set outgrows it); refreshes
+    # are already members — only first-time fetches extend the set
     new_keys = (
         results.where(~F.col("is_refresh"))
         .select("url_key")
         .dropDuplicates(["url_key"])
     )
     _commit_once(state.seen_keys, new_keys, "append", round_id)
-    bloom_cfg = seen_set.BloomConfig(n_buckets=cfg.n_buckets)
-    all_keys = state.seen_keys.read(spark)
+    bloom_cfg = seen_set.sized_config(
+        state.frontier._manifest(state.frontier.latest_version())["row_count"],
+        cfg.n_buckets,
+    )
     if shards is None:
-        next_shards = seen_set.build_bloom_shards(all_keys, "url_key", bloom_cfg)
+        next_shards = seen_set.build_bloom_shards(new_keys, "url_key", bloom_cfg)
     else:
-        # incremental: OR new keys into existing bitmaps; per-bucket
-        # rebuild only on capacity overflow — O(new), not O(seen)
         next_shards = seen_set.update_bloom_shards(
-            shards, new_keys, all_keys, "url_key", bloom_cfg
+            shards, new_keys, "url_key", bloom_cfg
         )
     _commit_once(state.seen_shards, next_shards, "overwrite", round_id,
-                 observe={"shard_total_bytes": seen_set.shard_bytes()})
-
-    # NOTE: no frontier write — the reference flips should_fetch/last_fetched
-    # in place (an ES doc update); at 10^10 rows the columnar equivalent is a
-    # full-table rewrite per round, so worklist state derives from the
-    # appended fetch log instead (eligible_work above).
+                 observe={"shard_total_bytes": seen_set.shard_bytes(),
+                          "n_buckets": F.max("nb")})
 
     # lineage + metrics per (round, host-bucket partition)
     per_bucket = (
@@ -363,7 +364,8 @@ def maintain(
         if compact_over_dirs and len(m["data_dirs"]) >= compact_over_dirs:
             r["compacted_to_version"] = t.compact(
                 spark,
-                carry_meta_keys=("round", "stage", "fetched", "ok"),
+                carry_meta_keys=("round", "stage", "fetched", "ok",
+                                 "shard_total_bytes", "n_buckets"),
             )
         r["expire"] = t.expire_snapshots(keep_last=keep_last)
         r["orphans_removed"] = t.remove_orphans(older_than_s=orphan_age_s)

@@ -467,10 +467,6 @@ def simhash32_md5(
     return agg.select(F.col(id_col), sim.alias("simhash32"))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # Telemetry of the most recent connected_components call ON THIS THREAD
 # (rounds taken, input edge count, whether the driver union-find cutover
 # fired). Written by every path so bench.py can surface convergence

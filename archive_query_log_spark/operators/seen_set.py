@@ -18,8 +18,12 @@ sources/__init__.py:56). The rebuild:
    which now touches only ~fpp · batch rows. Zero false negatives by
    construction → final seen set is *exactly* the reference's.
 
-No key ever leaves the seen set (refreshes bypass it and nothing retracts
-captures), so the Bloom shards need no deletion-capable twin.
+Each bucket's bitmap is sized once (``sized_config``: the crawl sizes it for
+its share of the immutable frontier, which bounds the seen set) and new keys
+are only OR-ed in. Past its design load a filter stays exact; only its
+false-positive share rises, and the exact anti-join absorbs the extra
+suspects. No key ever leaves the seen set (refreshes bypass it and nothing
+retracts captures), so the Bloom shards need no deletion-capable twin.
 """
 
 from __future__ import annotations
@@ -48,6 +52,7 @@ SHARD_SCHEMA = StructType(
         StructField("bits", BinaryType(), False),
         StructField("m", LongType(), False),
         StructField("k", IntegerType(), False),
+        # keys inserted so far: the shard's load (m / n is its bits per key)
         StructField("n", LongType(), False),
         # the bucketing modulus is part of the filter's identity: probing
         # with a different n_buckets than the build silently yields false
@@ -57,29 +62,29 @@ SHARD_SCHEMA = StructType(
 )
 
 
-def _shard_n_buckets(shards: DataFrame) -> int:
-    return int(shards.select("nb").first()["nb"])
+def _next_pow2(x: int) -> int:
+    return 1 << (max(1, x) - 1).bit_length()
 
 
-def _bloom_build_pdf(pdf: pd.DataFrame, cfg: "BloomConfig") -> pd.DataFrame:
-    """The one shard-build closure (used by fresh builds AND rebuilds — a
-    single copy of the sizing rule keeps the two paths bit-compatible)."""
-    n = len(pdf)
-    m = max(cfg.min_bits, 1 << int(np.ceil(np.log2(max(1, n) * cfg.bits_per_key))))
-    pos = _bloom_positions(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), cfg.k, m)
-    bits = np.zeros(m // 8, dtype=np.uint8)
-    flat = pos.ravel()
-    np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "bits": [bits.tobytes()],
-            "m": [m],
-            "k": [cfg.k],
-            "n": [n],
-            "nb": [cfg.n_buckets],
-        }
-    )
+def _insert(
+    shard: pd.Series | None, adds: pd.DataFrame, cfg: "BloomConfig"
+) -> pd.DataFrame:
+    """The one bit-setting closure: OR one bucket's hashes (``adds``) into
+    its shard row and return the new row. ``shard=None`` (no shard yet)
+    starts from a zero bitmap of ``cfg.min_bits`` — more if ``adds`` alone
+    would pass ``bits_per_key`` load; a bitmap's size never changes after."""
+    if shard is None:
+        m = max(cfg.min_bits, _next_pow2(len(adds) * cfg.bits_per_key))
+        row = {"bucket": int(adds["bucket"].iloc[0]), "bits": bytes(m // 8),
+               "m": m, "k": cfg.k, "n": 0, "nb": cfg.n_buckets}
+    else:
+        row = shard.to_dict()
+    bits = np.frombuffer(row["bits"], dtype=np.uint8).copy()
+    h1, h2 = adds["_h1"].to_numpy(), adds["_h2"].to_numpy()
+    pos = _bloom_positions(h1, h2, int(row["k"]), int(row["m"])).ravel()
+    np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+    row.update(bits=bits.tobytes(), n=int(row["n"]) + len(adds))
+    return pd.DataFrame([row])
 
 
 def first_seen_in_batch(
@@ -142,22 +147,37 @@ class BloomConfig:
     min_bits: int = 1 << 12
 
 
+def sized_config(expected_keys: int, n_buckets: int) -> BloomConfig:
+    """The one sizing rule: a config whose bitmaps hold each bucket's
+    share of ``expected_keys`` at ``bits_per_key`` load (a power of two, at
+    least the default 4096 bits). The crawl passes the frontier's row count,
+    which no seen set can outgrow."""
+    cfg = BloomConfig(n_buckets=n_buckets)
+    per_bucket = -(-expected_keys // n_buckets)
+    cfg.min_bits = max(cfg.min_bits, _next_pow2(per_bucket * cfg.bits_per_key))
+    return cfg
+
+
+def _hashed_keys(keys: DataFrame, key_col: str, cfg: BloomConfig) -> DataFrame:
+    return with_hashes(
+        keys.select(key_col).dropDuplicates([key_col]), key_col, cfg.n_buckets
+    ).select("bucket", "_h1", "_h2")
+
+
 def build_bloom_shards(
     keys: DataFrame, key_col: str = "url_key", cfg: BloomConfig | None = None
 ) -> DataFrame:
-    """Per-bucket Bloom bitmap build — one groupBy-applyInPandas pass.
+    """Per-bucket Bloom bitmap build — one groupBy-applyInPandas pass of
+    the insert closure over zero bitmaps.
 
     Shuffle: one hash-partition on bucket (the same partitioning the frontier
     uses, so wave-over-wave probes are co-located)."""
     cfg = cfg or BloomConfig()
-    hashed = with_hashes(
-        keys.select(key_col).dropDuplicates([key_col]), key_col, cfg.n_buckets
+    return (
+        _hashed_keys(keys, key_col, cfg)
+        .groupBy("bucket")
+        .applyInPandas(lambda adds: _insert(None, adds, cfg), SHARD_SCHEMA)
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bloom_build_pdf(pdf, cfg)
-
-    return hashed.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
 
 
 # Auto layout cutover: broadcast the shard set while its total blob bytes
@@ -192,12 +212,9 @@ def _probe_with_layout(
 ):
     """Layout machinery of the Bloom-shard probe.
 
-    The filter blobs never ride per-row: at 10M seen keys a shard bitmap
-    is ~0.5 MB, and a join-then-probe layout (the pre-round-6
-    implementation) duplicated each bucket's blob onto EVERY batch row
-    crossing the Arrow boundary — ~1 TB of Arrow traffic per 2M-row wave,
-    found by the 10M-URL soak (filtered_new was 464 s; small fixtures
-    never showed it because their bitmaps are bytes, not MBs).
+    The filter blobs never ride per-row: a join-then-probe layout copies
+    each bucket's blob onto every batch row crossing the Arrow boundary
+    (~1 TB per 2M-row wave at 10M seen keys; SCALE.md "Seen-set shards").
 
     - broadcast layout: the shard table (n_buckets rows) is collected once
       and shipped as a Spark BROADCAST VARIABLE; probing is a map-only
@@ -223,14 +240,12 @@ def _probe_with_layout(
     cleanup to the GC→ContextCleaner chain (one leaked shard dict per
     round adds up over a 10^4-round crawl).
     """
-    n_buckets = n_buckets if n_buckets is not None else _shard_n_buckets(shards)
+    if n_buckets is None:
+        n_buckets = int(shards.select("nb").first()["nb"])
     if broadcast_shards is None:
-        total = (
-            shard_size_bytes
-            if shard_size_bytes is not None
-            else shard_total_bytes(shards)
-        )
-        broadcast_shards = total <= _BROADCAST_SHARDS_MAX_BYTES
+        if shard_size_bytes is None:
+            shard_size_bytes = shard_total_bytes(shards)
+        broadcast_shards = shard_size_bytes <= _BROADCAST_SHARDS_MAX_BYTES
     hashed = with_hashes(batch, key_col, n_buckets)
     keep = [f for f in hashed.schema.fields if f.name not in ("_h1", "_h2")]
     keep_names = [f.name for f in keep]
@@ -322,108 +337,30 @@ def bloom_probe(
 def update_bloom_shards(
     shards: DataFrame,
     new_keys: DataFrame,
-    all_keys: DataFrame,
     key_col: str = "url_key",
     cfg: BloomConfig | None = None,
 ) -> DataFrame:
-    """Incremental shard maintenance: OR the new keys' bits into each
-    bucket's bitmap while its design capacity holds; buckets that would
-    exceed ``bits_per_key`` load are rebuilt from ``all_keys`` (that bucket
-    only). Rebuilding every shard from the full seen set each round — the
-    naive alternative — is an O(|seen|) pass per round and unusable at
-    10^10 keys; this path is O(|new| + rebuilt buckets).
+    """Incremental shard maintenance: one bucket-cogrouped pass of the
+    insert closure — each bucket's new keys are OR-ed into its bitmap; a
+    bucket with no shard yet starts from a zero bitmap, as in
+    ``build_bloom_shards``. O(new keys + n_buckets shard rows); no bitmap is
+    ever resized or rebuilt. OR only adds bits, so there are no false
+    negatives: a filter past its design load stays exact, and only its
+    false-positive share rises (``sized_config`` sizes it to avoid that).
 
-    Guarantee preserved: zero false negatives (OR only adds bits; rebuilds
-    re-insert every key of the bucket).
-
-    Raises ``ValueError`` for shards built with another ``n_buckets`` than
-    ``cfg``'s: the keys would land in the wrong buckets, and rebucketing
-    needs a full rebuild. The rebuild-decision collect below brings the
-    mismatched shards' recorded ``nb`` back, so the check costs no job.
-    """
+    ``shards`` must carry ``cfg.n_buckets`` in ``nb`` — under another
+    modulus new keys land in the wrong buckets; the crawl checks this
+    before its round."""
     cfg = cfg or BloomConfig()
-    hashed = with_hashes(
-        new_keys.select(key_col).dropDuplicates([key_col]), key_col, cfg.n_buckets
-    )
-    # Which buckets need a rebuild is decidable from METADATA alone
-    # (per-bucket add counts vs design capacity) — no bitmap blob and no
-    # Python worker is touched to decide, and the adds shuffle runs ONCE
-    # (the pre-round-6 layout collect_list'ed every bucket's adds into a
-    # single array row — a giant-row hazard at 10^8 new keys/round — and
-    # double-executed the blob-producing map to read its rebuild flags).
-    counts = hashed.groupBy("bucket").agg(F.count("*").alias("n_add"))
-    meta = (
-        shards.select("bucket", "m", "n", "nb")
-        .join(counts, on="bucket", how="full_outer")
-    )
-    decided = (
-        meta.where(
-            F.col("m").isNull()  # brand-new bucket
-            | (
-                (F.col("n") + F.coalesce(F.col("n_add"), F.lit(0)))
-                * cfg.bits_per_key
-                > F.col("m")
-            )
-            | (F.col("nb") != cfg.n_buckets)
-        )
-        .select("bucket", "nb")
-        .collect()
-    )
-    wrong_nb = {int(r["nb"]) for r in decided if r["nb"] is not None} - {
-        cfg.n_buckets
-    }
-    if wrong_nb:
-        raise ValueError(
-            f"shards were built with n_buckets={min(wrong_nb)}, update "
-            f"requested {cfg.n_buckets} — rebucketing requires a full rebuild"
-        )
-    rebuild = [int(r["bucket"]) for r in decided]
-    kept_shards = shards
-    kept_adds = hashed.select("bucket", "_h1", "_h2")
-    if rebuild:
-        kept_shards = kept_shards.where(~F.col("bucket").isin(rebuild))
-        kept_adds = kept_adds.where(~F.col("bucket").isin(rebuild))
 
-    def or_update(shard_pdf: pd.DataFrame, adds_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(shard_pdf):  # adds-only bucket → handled by the rebuild leg
-            return pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
-        r = shard_pdf.iloc[0]
-        bits, m, k, n = r["bits"], int(r["m"]), int(r["k"]), int(r["n"])
-        if len(adds_pdf):
-            arr = np.frombuffer(bits, dtype=np.uint8).copy()
-            pos = _bloom_positions(
-                adds_pdf["_h1"].to_numpy(), adds_pdf["_h2"].to_numpy(), k, m
-            ).ravel()
-            np.bitwise_or.at(arr, pos // 8, (1 << (pos % 8)).astype(np.uint8))
-            bits, n = arr.tobytes(), n + len(adds_pdf)
-        return pd.DataFrame(
-            {
-                "bucket": [int(r["bucket"])],
-                "bits": [bits],
-                "m": [m],
-                "k": [k],
-                "n": [n],
-                "nb": [int(r["nb"])],
-            }
-        )
+    def insert(shard_pdf: pd.DataFrame, adds_pdf: pd.DataFrame) -> pd.DataFrame:
+        return _insert(shard_pdf.iloc[0] if len(shard_pdf) else None, adds_pdf, cfg)
 
-    updated = (
-        kept_shards.groupBy("bucket")
-        .cogroup(kept_adds.groupBy("bucket"))
-        .applyInPandas(or_update, SHARD_SCHEMA)
+    return (
+        shards.groupBy("bucket")
+        .cogroup(_hashed_keys(new_keys, key_col, cfg).groupBy("bucket"))
+        .applyInPandas(insert, SHARD_SCHEMA)
     )
-    if not rebuild:
-        return updated
-    # per-bucket rebuild through the SAME build closure as fresh builds
-    rb_keys = with_hashes(
-        all_keys.select(key_col).dropDuplicates([key_col]), key_col, cfg.n_buckets
-    ).where(F.col("bucket").isin(rebuild))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bloom_build_pdf(pdf, cfg)
-
-    rebuilt = rb_keys.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
-    return updated.unionByName(rebuilt)
 
 
 def filtered_new(

@@ -21,7 +21,7 @@ from archive_query_log_spark.tables import SnapshotTable
 TABLES = ("frontier", "fetches", "seen_keys", "seen_shards", "metrics")
 # jobs per round of the fixture crawl below (round 0 builds the Bloom
 # shards, round 1 probes and OR-updates them), measured at local[4]
-ROUND_JOB_CEILING = (18, 29)
+ROUND_JOB_CEILING = (18, 25)
 
 
 def _jobs_of(spark, fn):

@@ -37,20 +37,42 @@ def test_bloom_path_equals_exact_path(spark):
     assert a == b
     assert len(a) > 0
 
+    # an overloaded filter: one 4096-bit shard (design load 256 keys) OR-
+    # updated to 10x that load. Its false-positive share is high, but it has
+    # no false negatives, so the exact re-check keeps the result exact.
+    keys = synth.synth_frontier(spark, 4000, 500, 8).select("url_key", "ts", "id")
+    cfg = seen_set.BloomConfig(n_buckets=1, min_bits=1 << 12)
+    full = keys.select("url_key").distinct().orderBy("url_key").limit(2560).cache()
+    assert full.count() == 2560
+    small = seen_set.build_bloom_shards(full.limit(16), "url_key", cfg)
+    over = seen_set.update_bloom_shards(small, full, "url_key", cfg).cache()
+    (row,) = over.collect()
+    assert row["m"] == 1 << 12 and row["n"] * cfg.bits_per_key >= 10 * row["m"]
+    exact = seen_set.exact_new(keys, full, "url_key")
+    filt = seen_set.filtered_new(keys, full, over, "url_key", 1)
+    a = sorted(r["id"] for r in exact.collect())
+    assert a == sorted(r["id"] for r in filt.collect())
+    assert len(a) > 0
 
-def test_incremental_shard_update_equals_rebuild(spark):
-    """OR-merge + selective rebuild keeps the zero-false-negative guarantee
-    and matches a from-scratch rebuild's verdicts on inserted keys."""
+
+def test_incremental_shard_update_keeps_build_fpp(spark):
+    """OR-updating capacity-sized shards keeps the zero-false-negative
+    guarantee and a false-positive count near a from-scratch build's."""
     keys = synth.synth_frontier(spark, 2000, 400, 8).select("url_key").distinct()
     keys.cache()
     first = keys.orderBy("url_key").limit(500).cache()
     rest = keys.join(first, "url_key", "left_anti").cache()
-    cfg = seen_set.BloomConfig(n_buckets=8, min_bits=1 << 12)
+    # the sizing rule: 16 bits per expected key per bucket, rounded up to a
+    # power of two, never under 4096 bits (the bench frontiers: 12k, 48k)
+    assert [seen_set.sized_config(n, 32).min_bits for n in (0, 12_000, 48_000)] == [
+        1 << 12, 1 << 13, 1 << 15
+    ]
+    # sized for every key up front, as the crawl sizes for its frontier
+    cfg = seen_set.sized_config(keys.count(), 8)
     shards0 = seen_set.build_bloom_shards(first, "url_key", cfg).cache()
-    # incremental add of the rest (forces some capacity rebuilds:
-    # 500→~1700 keys at 16 bits/key vs 4096-bit minimum shards)
-    shards1 = seen_set.update_bloom_shards(shards0, rest, keys, "url_key", cfg)
+    shards1 = seen_set.update_bloom_shards(shards0, rest, "url_key", cfg)
     shards1 = shards1.cache()
+    assert {r["m"] for r in shards1.select("m").collect()} == {cfg.min_bits}
     probed = seen_set.bloom_probe(keys, shards1, "url_key", 8)
     assert probed.where(~F.col("maybe_seen")).count() == 0
     # fpp sanity vs full rebuild on unseen keys
@@ -68,9 +90,9 @@ def test_incremental_shard_update_equals_rebuild(spark):
 
 
 def test_incremental_update_handles_brand_new_buckets(spark):
-    """A bucket present only on the adds side (no existing shard) must be
-    routed to the rebuild leg — under the cogrouped layout such groups
-    arrive with an empty shard frame and would otherwise be dropped."""
+    """A bucket present only on the adds side (no existing shard) starts
+    from a zero bitmap — under the cogrouped layout such groups arrive with
+    an empty shard frame and would otherwise be dropped."""
     cfg = seen_set.BloomConfig(n_buckets=8)
     keys = spark.createDataFrame(
         [(f"k{i}",) for i in range(600)], "url_key string"
@@ -81,7 +103,7 @@ def test_incremental_update_handles_brand_new_buckets(spark):
     assert lo.count() > 0 and hi.count() > 0
     shards0 = seen_set.build_bloom_shards(lo, "url_key", cfg).cache()
     assert shards0.count() <= 4  # only low buckets exist
-    shards1 = seen_set.update_bloom_shards(shards0, hi, keys, "url_key", cfg)
+    shards1 = seen_set.update_bloom_shards(shards0, hi, "url_key", cfg)
     shards1.cache()
     assert shards1.select("bucket").distinct().count() == 8
     probed = seen_set.bloom_probe(keys, shards1, "url_key", cfg.n_buckets)
@@ -201,22 +223,25 @@ def test_pipeline_commit_stashes_shard_bytes(spark, tmp_path):
             state.seen_shards.read(spark, m["version"])
         )
         assert stashed == fresh > 0
+        assert m["meta"]["n_buckets"] == 32
 
 
-def test_update_rejects_shards_of_another_bucket_count(spark):
-    """Shards built with n_buckets=8 cannot take an update under a config
-    of 4: the new keys would hash into the wrong buckets (false
-    negatives). The check rides the rebuild-decision collect, so it raises
-    before the update's plan is returned."""
-    keys = spark.createDataFrame(
-        [(f"k{i}",) for i in range(300)], "url_key string"
-    )
-    shards = seen_set.build_bloom_shards(
-        keys, "url_key", seen_set.BloomConfig(n_buckets=8)
-    )
-    new = spark.createDataFrame([("n1",), ("n2",)], "url_key string")
+def test_run_round_rejects_changed_n_buckets_before_any_commit(spark, tmp_path):
+    """Shards written with n_buckets=32 cannot serve a round under 4: the
+    probe and the update would hash keys into the wrong buckets (false
+    negatives). run_round checks the modulus observed on the shards commit
+    before anything runs, so it raises and no table gains a snapshot."""
+    from archive_query_log_spark.crawler import pipeline
+
+    images = synth.synth_images(spark, 50, 8)
+    frontier = synth.synth_frontier(spark, 200, 50, 8)
+    robots = synth.synth_robots(spark)
+    state = pipeline.init_state(str(tmp_path / "nb"), frontier)
+    pipeline.run_round(spark, state, images, robots, pipeline.CrawlConfig(), 0)
+    tables = ("frontier", "fetches", "seen_keys", "seen_shards", "metrics")
+    before = {t: getattr(state, t).latest_version() for t in tables}
     with pytest.raises(ValueError, match="rebucketing"):
-        seen_set.update_bloom_shards(
-            shards, new, keys.unionByName(new), "url_key",
-            seen_set.BloomConfig(n_buckets=4),
+        pipeline.run_round(
+            spark, state, images, robots, pipeline.CrawlConfig(n_buckets=4), 1
         )
+    assert {t: getattr(state, t).latest_version() for t in tables} == before
