@@ -8,8 +8,8 @@ SURVEY.md §2.11 — worklist flags, not a stream processor):
             over score buckets so a hot host spreads across tasks)
         ──▶ fetch+validate (one Arrow pass per distinct payload,
             verdicts joined back onto the scheduled fetches)
-        ──▶ commits (append-only): fetches++, seen_keys++,
-                     seen_shards (new keys' Bloom bits OR-ed in), metrics++
+        ──▶ commits, in order: fetches++, seen_keys++ (appends), seen_shards
+            (new keys' Bloom bits OR-ed in) — the last: it marks the round done
 
 The frontier is never rewritten: worklist state (fetched? when?) derives
 from the appended fetch log — the reference's in-place ES flag updates
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from archive_query_log_spark.crawler.fetch import fetch_and_validate
 from archive_query_log_spark.operators import politeness, seen_set, worklist
-from archive_query_log_spark.tables import SnapshotTable
+from archive_query_log_spark.tables import SnapshotTable, bucket_of
 
 T0 = "2024-01-01 00:00:00"
 
@@ -67,11 +67,10 @@ class CrawlState:
     fetches: SnapshotTable = field(init=False)
     seen_keys: SnapshotTable = field(init=False)
     seen_shards: SnapshotTable = field(init=False)
-    metrics: SnapshotTable = field(init=False)
 
     def __post_init__(self):
         self.root = Path(self.root)
-        for name in ("frontier", "fetches", "seen_keys", "seen_shards", "metrics"):
+        for name in ("frontier", "fetches", "seen_keys", "seen_shards"):
             setattr(self, name, SnapshotTable(self.root / name))
 
 
@@ -157,10 +156,11 @@ def _commit_once(
 
 
 def next_round_id(state: CrawlState) -> int:
-    v = state.metrics.latest_version()
+    """One past the last complete round: ``seen_shards`` is its last commit."""
+    v = state.seen_shards.latest_version()
     if v is None:
         return 0
-    return state.metrics._manifest(v)["meta"].get("round", -1) + 1
+    return state.seen_shards._manifest(v)["meta"].get("round", -1) + 1
 
 
 def run_round(
@@ -171,7 +171,7 @@ def run_round(
     cfg: CrawlConfig | None = None,
     round_id: int = 0,
 ) -> dict:
-    """Execute one crawl round; returns its metrics dict."""
+    """Execute one crawl round; returns its totals dict."""
     from archive_query_log_spark.functions.ids import worklist_score
 
     cfg = cfg or CrawlConfig()
@@ -230,7 +230,7 @@ def run_round(
         budget_waves=cfg.budget_waves,
     ).drop("t0")
 
-    # fetch + validate; cache: used for fetches commit, seen update, metrics.
+    # fetch + validate; cache: used for the fetches commit and the seen update.
     # The cached plan ends in the politeness rank's shuffle; AQE coalesces
     # it to the data's size (session.get_spark allows it for cached plans),
     # so each consumer runs a few tasks and the fetches commit writes a few
@@ -272,8 +272,7 @@ def run_round(
     )
     _commit_once(state.seen_keys, new_keys, "append", round_id)
     bloom_cfg = seen_set.sized_config(
-        state.frontier._manifest(state.frontier.latest_version())["row_count"],
-        cfg.n_buckets,
+        state.frontier._snapshot(None)["row_count"], cfg.n_buckets
     )
     if shards is None:
         next_shards = seen_set.build_bloom_shards(new_keys, "url_key", bloom_cfg)
@@ -285,12 +284,18 @@ def run_round(
                  observe={"shard_total_bytes": seen_set.shard_bytes(),
                           "n_buckets": F.max("nb")})
 
-    # lineage + metrics per (round, host-bucket partition)
-    per_bucket = (
-        results.withColumn(
-            "bucket", F.pmod(F.xxhash64("host"), F.lit(cfg.n_buckets)).cast("int")
-        )
-        .groupBy("bucket")
+    results.unpersist()
+    return {"round": round_id, "fetched": totals["fetched"], "ok": totals["ok"]}
+
+
+def round_metrics(spark: SparkSession, state: CrawlState) -> DataFrame:
+    """Per-(round, host-bucket) lineage rollup of the fetch log, bucketed by
+    the seen-set modulus the shards commit observed (fixed for a crawl)."""
+    n_buckets = state.seen_shards._snapshot(None)["meta"]["n_buckets"]
+    return (
+        state.fetches.read(spark)
+        .withColumn("bucket", bucket_of("host", n_buckets))
+        .groupBy("round", "bucket")
         .agg(
             F.count("*").alias("fetched"),
             F.sum(F.when(F.col("fetch_status") == 200, 1).otherwise(0)).alias("ok"),
@@ -301,25 +306,20 @@ def run_round(
             ).alias("valid"),
             F.max("wave").alias("max_wave"),
         )
-        .withColumn("round", F.lit(round_id))
     )
-    _commit_once(state.metrics, per_bucket, "append", round_id)
-    results.unpersist()
-    return {"round": round_id, "fetched": totals["fetched"], "ok": totals["ok"]}
 
 
 def crawl_progress(spark: SparkSession, state: CrawlState) -> DataFrame:
     """Monitoring rollup (the reference's stage-progress API,
     monitoring.py:258-288/458-571): per-round fetched/ok/valid counts plus
-    overall frontier coverage, from the committed metrics + fetch log."""
-    metrics = state.metrics.read(spark)
-    per_round = metrics.groupBy("round").agg(
+    overall frontier coverage, from the fetch log and the frontier manifest."""
+    per_round = round_metrics(spark, state).groupBy("round").agg(
         F.sum("fetched").alias("fetched"),
         F.sum("ok").alias("ok"),
         F.sum("valid").alias("valid"),
         F.max("max_wave").alias("max_wave"),
     )
-    total_frontier = state.frontier.read(spark).count()
+    total_frontier = state.frontier._snapshot(None)["row_count"]
     fetched_ids = state.fetches.read(spark).select("id").distinct().count()
     return per_round.withColumn(
         "frontier_total", F.lit(total_frontier)
@@ -355,7 +355,7 @@ def maintain(
             f" snapshot), got {keep_last}"
         )
     report: dict = {}
-    for name in ("frontier", "fetches", "seen_keys", "seen_shards", "metrics"):
+    for name in ("frontier", "fetches", "seen_keys", "seen_shards"):
         t: SnapshotTable = getattr(state, name)
         if not t.exists():
             continue
@@ -383,8 +383,8 @@ def run(
 ) -> list[dict]:
     """Drive rounds until the pending worklist is empty (or max_rounds).
 
-    Resumes automatically: the next round id comes from the committed
-    metrics log, so a killed ``run`` continues where it stopped."""
+    Resumes automatically: ``next_round_id`` reads a round's last commit
+    (``seen_shards``), so a killed ``run`` replays its torn round."""
     stats = []
     cfg = cfg or CrawlConfig()
     r0 = next_round_id(state)

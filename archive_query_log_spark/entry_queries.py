@@ -2719,14 +2719,12 @@ FROM g
 
 @_q("crawl_pipeline_round", _crawl_metrics_oracle())
 def crawl_pipeline_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(round, host-bucket) lineage metrics of the 3-round crawl vs the
-    twin's independent rollup (incl. an independent pure-Python XXH64 for
-    the bucket assignment) — formerly the last substantive rows-only entry,
-    now hash-gated."""
-    state = _crawl_3round_state(spark)
-    return state.metrics.read(spark).select(
-        "round", "bucket", "fetched", "ok", "valid", "max_wave"
-    )
+    """Per-(round, host-bucket) lineage metrics of the 3-round crawl
+    (``pipeline.round_metrics``) vs the twin's independent rollup (incl. an
+    independent pure-Python XXH64 for the bucket assignment)."""
+    from archive_query_log_spark.crawler import pipeline
+
+    return pipeline.round_metrics(spark, _crawl_3round_state(spark))
 
 
 # ---------------------------------------------------------------------------

@@ -301,7 +301,7 @@ class SnapshotTable:
         leaves only orphan dirs, which ``remove_orphans`` collects.
 
         At 10^10-frontier scale this bounds the commit log of the per-round
-        append tables (fetch log, metrics): without expiry every round adds
+        append tables (fetch log, seen keys): without expiry every round adds
         a manifest forever. ``keep_last`` must cover the RESUME window of
         whatever reads the table: the crawl pipeline's crash-replay path
         reads the snapshot *before* the replayed round

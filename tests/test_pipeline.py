@@ -1,13 +1,26 @@
 """End-to-end crawl pipeline: convergence, validation, exactly-once resume."""
 
+import importlib
 import os
 import shutil
+import sys
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from archive_query_log_spark.crawler import pipeline, synth
+
+
+def _tool(name: str):
+    """Import a module of the repo's tools/ directory."""
+    tools = str(Path(__file__).resolve().parent.parent / "tools")
+    sys.path.insert(0, tools)
+    try:
+        return importlib.import_module(name)
+    finally:
+        sys.path.remove(tools)
 
 
 @pytest.fixture(scope="module")
@@ -106,67 +119,95 @@ def test_per_fetch_path_equals_content_addressed_path(spark, fixtures):
     ]
 
 
-def test_crawl_progress_rollup(spark, fixtures):
+def test_crawl_progress_rollup(spark, fixtures, monkeypatch):
     images, frontier, robots = fixtures
     root = tempfile.mkdtemp(prefix="t_prog_")
     try:
         state = pipeline.init_state(root, frontier)
         cfg = pipeline.CrawlConfig(budget_waves=16)
-        pipeline.run(spark, state, images, robots, cfg, max_rounds=2)
+        stats = pipeline.run(spark, state, images, robots, cfg, max_rounds=2)
+
+        def frontier_scan(*args, **kwargs):
+            raise AssertionError("crawl_progress read the frontier")
+
+        # the frontier's size comes from its manifest's row_count
+        monkeypatch.setattr(state.frontier, "read", frontier_scan)
         prog = pipeline.crawl_progress(spark, state).collect()
-        assert len(prog) == 2
+        assert [(r["round"], r["fetched"]) for r in prog] == [
+            (st["round"], st["fetched"]) for st in stats
+        ]
         assert all(r["fetched"] == r["ok"] == r["valid"] for r in prog)
-        assert 0 < prog[0]["frontier_fetched_ratio"] <= 1.0
+        assert all(r["frontier_total"] == 800 for r in prog)
+        fetched_ids = state.fetches.read(spark).select("id").distinct().count()
+        assert 0 < fetched_ids <= 800
+        assert all(
+            r["frontier_fetched_ratio"] == pytest.approx(fetched_ids / 800, abs=1e-6)
+            for r in prog
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_crash_resume_exactly_once(spark, fixtures):
+# the clock is pinned, so fetched_at is the same in every run
+CRASH_CFG = pipeline.CrawlConfig(budget_waves=16, now="2024-02-01 00:00:00")
+
+
+def _crawl_digest(spark, state) -> tuple[str, list[str]]:
+    """(digest of every fetch-log column, sorted seen keys)."""
+    fetches = state.fetches.read(spark)
+    seen = state.seen_keys.read(spark).collect()
+    digest = _tool("submit_crawl").table_digest(fetches, fetches.columns)
+    return digest, sorted(r["url_key"] for r in seen)
+
+
+@pytest.fixture(scope="module")
+def clean_round(spark, fixtures):
+    """An uninterrupted round 0: (its totals, its _crawl_digest)."""
     images, frontier, robots = fixtures
-    cfg = pipeline.CrawlConfig(budget_waves=16)
-    rootA = tempfile.mkdtemp(prefix="t_crashA_")
-    rootB = tempfile.mkdtemp(prefix="t_crashB_")
+    root = tempfile.mkdtemp(prefix="t_clean_")
     try:
-        stateA = pipeline.init_state(rootA, frontier)
-        first = pipeline.run_round(spark, stateA, images, robots, cfg, 0)
-        # simulate a kill after the fetches commit but before the seen-set
-        # (and metrics) commits — the dangerous half-committed window
-        os.remove(sorted(stateA.seen_keys.snap_dir.glob("v*.json"))[-1])
-        os.remove(sorted(stateA.seen_shards.snap_dir.glob("v*.json"))[-1])
-        os.remove(sorted(stateA.metrics.snap_dir.glob("v*.json"))[-1])
+        state = pipeline.init_state(root, frontier)
+        stats = pipeline.run_round(spark, state, images, robots, CRASH_CFG, 0)
+        yield stats, _crawl_digest(spark, state)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "torn",
+    [("seen_keys", "seen_shards"), ("seen_shards",)],
+    ids=["after_fetches", "after_seen_keys"],
+)
+def test_crash_resume_exactly_once(spark, fixtures, clean_round, torn):
+    """A kill after the fetches commit, or after the seen_keys commit,
+    leaves round 0 without its completion marker (the seen_shards commit):
+    ``run`` resumes at that round, skips the commits that survived, and
+    ends with the rows of an uninterrupted run."""
+    images, frontier, robots = fixtures
+    root = tempfile.mkdtemp(prefix="t_crash_")
+    try:
+        state = pipeline.init_state(root, frontier)
+        first = pipeline.run_round(spark, state, images, robots, CRASH_CFG, 0)
+        for name in torn:
+            os.remove(sorted(getattr(state, name).snap_dir.glob("v*.json"))[-1])
+        assert pipeline.next_round_id(state) == 0
         # the fetches commit survived, so the replay skips it and reports
         # the totals observed on it from its manifest
-        replayed = pipeline.run_round(spark, stateA, images, robots, cfg, 0)
-
-        stateB = pipeline.init_state(rootB, frontier)
-        clean = pipeline.run_round(spark, stateB, images, robots, cfg, 0)
-        assert first == replayed == clean
-        assert clean["fetched"] > 0
-
-        a = sorted(r["url_key"] for r in stateA.seen_keys.read(spark).collect())
-        b = sorted(r["url_key"] for r in stateB.seen_keys.read(spark).collect())
-        assert a == b
-        assert (
-            stateA.fetches.read(spark).count() == stateB.fetches.read(spark).count()
-        )
+        replayed = pipeline.run(spark, state, images, robots, CRASH_CFG, max_rounds=1)
+        stats, digest = clean_round
+        assert [first] == replayed == [stats]
+        assert stats["fetched"] > 0
+        assert pipeline.next_round_id(state) == 1
+        assert _crawl_digest(spark, state) == digest
     finally:
-        shutil.rmtree(rootA, ignore_errors=True)
-        shutil.rmtree(rootB, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_crawl_goldens_regenerate_byte_identically():
     """data/crawl_goldens.json is exactly what the pure-Python pipeline
     twin produces today — a drift in synth/codec/url_key/politeness math
     fails here; a drift in the Spark plumbing fails the driver gate."""
-    import sys
-    from pathlib import Path
-
-    tools = Path(__file__).resolve().parent.parent / "tools"
-    sys.path.insert(0, str(tools))
-    try:
-        import make_crawl_goldens as gen
-    finally:
-        sys.path.remove(str(tools))
+    gen = _tool("make_crawl_goldens")
     committed = gen.OUT_PATH.read_text()
     assert committed == gen.render()
     # the driver-gated entry must run the SAME fixture the generator
@@ -182,17 +223,7 @@ def test_crawl_twin_xxh64_matches_spark(spark):
     """The twin's independent XXH64 (bucket metrics) is bit-equal to
     Spark's xxhash64 over the fixture's host strings plus length edges
     (0, <4, <8, 31/32 stride boundaries, multi-byte UTF-8)."""
-    import sys
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    tools = Path(__file__).resolve().parent.parent / "tools"
-    sys.path.insert(0, str(tools))
-    try:
-        import make_crawl_goldens as gen
-    finally:
-        sys.path.remove(str(tools))
+    gen = _tool("make_crawl_goldens")
     vals = [f"h{i:02d}.example.com" for i in range(50)] + [
         "", "a", "abcd", "abcdefgh", "x" * 31, "y" * 32, "z" * 100, "héllo✓",
     ]

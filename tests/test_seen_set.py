@@ -238,7 +238,7 @@ def test_run_round_rejects_changed_n_buckets_before_any_commit(spark, tmp_path):
     robots = synth.synth_robots(spark)
     state = pipeline.init_state(str(tmp_path / "nb"), frontier)
     pipeline.run_round(spark, state, images, robots, pipeline.CrawlConfig(), 0)
-    tables = ("frontier", "fetches", "seen_keys", "seen_shards", "metrics")
+    tables = ("frontier", "fetches", "seen_keys", "seen_shards")
     before = {t: getattr(state, t).latest_version() for t in tables}
     with pytest.raises(ValueError, match="rebucketing"):
         pipeline.run_round(
